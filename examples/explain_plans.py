@@ -24,7 +24,7 @@ CASES = [
     (
         "topk_kernel_cosine",
         "Broadcast-corpus kernel top-k: scan -> ArrowEvalPython (the "
-        "pandas-UDF kernel) -> inline; queries partition freely, corpus "
+        "Arrow-UDF kernel) -> inline; queries partition freely, corpus "
         "rides a broadcast — NO shuffle anywhere in the plan",
     ),
     (

@@ -9,12 +9,20 @@ to idiomatic Spark:
   expressions with TypeError (python/polars_matmul/__init__.py:109-114).
   Here it ships to executors as a SparkContext broadcast — the
   distributed analog of the reference's broadcast-by-closure.
-- the kernel runs inside an Arrow-batched pandas UDF: JVM -> Arrow ->
-  NumPy BLAS, the Spark analog of the reference's GIL-released Rust/faer
-  call (src/lib.rs:45, src/metrics.rs:85-93).
+- Arrow is the only batch format between Spark and the NumPy kernels:
+  one decoder (:func:`arrow_list_to_matrix`, the analog of the
+  reference's zero-copy matrix extraction, src/matmul.rs:21-95), one
+  per-batch function per operator (:func:`topk_batch`,
+  :func:`matmul_batch`) that runs the BLAS kernel (the Spark analog of
+  the reference's GIL-released Rust/faer call, src/lib.rs:45,
+  src/metrics.rs:85-93) and encodes the result as flat buffers under
+  one offsets vector, and two entry forms over them: the Column forms
+  (``topk``/``matmul``, and so ``.pmm``) are Arrow UDFs, the DataFrame
+  forms (``topk_arrow``/``matmul_arrow``) run through the shared
+  ``mapInArrow`` plumbing :func:`map_arrow_batches`.
 - output schemas are DECLARED to Catalyst via returnType, like the
   reference's return_dtype declaration (python/polars_matmul/__init__.py:118).
-- pandas UDFs are elementwise (row-preserving), so Catalyst pushes
+- scalar Arrow UDFs are elementwise (row-preserving), so Catalyst pushes
   filters/projections around them — the is_elementwise=True analog.
 
 Scale note (100 TB): this path requires the corpus to fit in executor
@@ -31,9 +39,11 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from polars_matmul_spark import kernels as K
 
@@ -46,6 +56,11 @@ __all__ = [
     "topk_arrow",
     "topk_exploded",
     "corpus_to_matrix",
+    "arrow_list_to_matrix",
+    "rows_to_list_array",
+    "map_arrow_batches",
+    "topk_batch",
+    "matmul_batch",
 ]
 
 
@@ -101,51 +116,143 @@ def _active_sc():
     return spark.sparkContext
 
 
-def _batch_to_matrix(s: pd.Series, dtype=None) -> np.ndarray:
-    """Arrow batch (Series of ndarrays) -> dense (n, d) matrix.
+def arrow_list_to_matrix(arr, dtype=None, expected_dim=None) -> np.ndarray:
+    """Arrow list column -> dense (n, d) matrix, reading the flat child
+    buffer directly — the closest Spark gets to the reference's
+    zero-copy contiguous extraction (src/matmul.rs:21-95): one
+    ``reshape`` over the values buffer, no pandas, no per-row objects.
+    Falls back to the careful row loop for ragged/null rows.
 
-    One np.stack per batch — the Spark analog of the reference's
-    zero-copy contiguous extraction (src/matmul.rs:21-95): no
-    per-element Python loop in the common (null-free) case.
-    Null elements inside vectors become 0.0 (src/matmul.rs:251); whole
-    null rows become zero vectors.
+    This is the one batch decoder between Spark and the kernels. Its
+    null rule: a null element or a null vector becomes 0.0
+    (src/matmul.rs:192, 224, 251); a data NaN is a value, not a null,
+    and propagates into the NaN-safe top-k like the reference
+    (src/topk.rs:19-29).
     """
-    vals = s.to_numpy()
-    n = len(vals)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
     if n == 0:
         return np.empty((0, 0), dtype=dtype or np.float64)
-    first = vals[0]
-    if first is None:
-        raise ValueError("First element is null")
-    try:
-        mat = np.stack(vals)  # keeps the Arrow dtype (f32 stays f32)
+    offsets = arr.offsets.to_numpy()
+    widths = np.diff(offsets)
+    if arr.null_count == 0 and arr.values.null_count == 0 and (widths == widths[0]).all():
+        values = arr.values.to_numpy(zero_copy_only=True)
+        mat = values[offsets[0] : offsets[-1]].reshape(n, int(widths[0]))
         if dtype is not None:
             mat = mat.astype(dtype, copy=False)
         elif not np.issubdtype(mat.dtype, np.floating):
             mat = mat.astype(np.float64)
-    except ValueError:
-        # ragged rows or None rows: fall back to the careful path
-        dim = len(first)
-        mat = np.zeros((n, dim), dtype=dtype or np.float64)
-        for i, v in enumerate(vals):
-            if v is None:
-                continue
-            a = np.asarray(v, dtype=np.float64)
-            if a.shape[0] != dim:
-                raise ValueError(
-                    f"Dimension mismatch: left has {dim} dimensional "
-                    f"vectors, right has {a.shape[0]} dimensional vectors"
-                )
-            mat[i, :] = a
-    # null float elements arrive from Arrow as NaN -> 0.0 per the
-    # reference's null-element rule (src/matmul.rs:192, 224)
-    return np.nan_to_num(mat, nan=0.0, copy=False)
+        return mat
+    # distributed deviation from the reference's "First element is
+    # null" rule (src/matmul.rs:238): a partition-local batch can start
+    # with a null row even when the dataset has valid rows, so the
+    # width is inferred from the first VALID row; only an all-null
+    # batch is unrecoverable.
+    rows = arr.to_pylist()
+    first_valid = next((r for r in rows if r is not None), None)
+    if first_valid is None:
+        # an entirely-null batch: the width comes from the corpus when
+        # the caller knows it (null vectors are zero vectors per
+        # src/matmul.rs:251); without it the batch is unrecoverable
+        if expected_dim is None:
+            raise ValueError("First element is null")
+        return np.zeros((n, expected_dim), dtype=dtype or np.float64)
+    if rows[0] is None:
+        rows = [first_valid] + rows[1:]
+        mat = K.to_matrix(rows, dtype=dtype)
+        mat[0, :] = 0.0
+        return mat
+    return K.to_matrix(rows, dtype=dtype)
 
 
-def _input_is_f32(df_or_col_dtype) -> bool:
-    return isinstance(df_or_col_dtype, T.ArrayType) and isinstance(
-        df_or_col_dtype.elementType, T.FloatType
+def rows_to_list_array(child: pa.Array, n: int, list_type: pa.ListType) -> pa.ListArray:
+    """``n`` equal-width lists over the flat ``child`` buffer (row-major,
+    ``len(child) // n`` elements each): the one encoder from kernel
+    output to an Arrow list column — an offsets vector, zero per-row
+    Python. ``list_type`` is the exact Arrow form of the declared Spark
+    type, non-nullable fields included, so no cast runs downstream."""
+    width = len(child) // n if n else 0
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width, type=pa.int32())
+    return pa.ListArray.from_arrays(offsets, child, type=list_type)
+
+
+_TOPK_ARROW = to_arrow_type(TOPK_TYPE)
+
+
+def topk_batch(Q: np.ndarray, C: np.ndarray, k: int, metric: str) -> pa.ListArray:
+    """One query batch -> its ``TOPK_TYPE`` column: the fused kernel
+    (f32 iff BOTH sides f32, src/matmul.rs:307-314) with flat
+    index/score buffers under one offsets vector."""
+    Q = Q.astype(K.promote_dtype(Q.dtype, C.dtype), copy=False)
+    idx, sc = K.topk(Q, C, k, metric)
+    struct_type = _TOPK_ARROW.value_type
+    matches = pa.StructArray.from_arrays(
+        [
+            pa.array(idx.ravel(), type=pa.int64()),
+            pa.array(sc.ravel(), type=pa.float64()),
+        ],
+        fields=list(struct_type),
     )
+    return rows_to_list_array(matches, len(Q), _TOPK_ARROW)
+
+
+def _matmul_type(out_np) -> T.ArrayType:
+    elem = T.FloatType() if out_np == np.float32 else T.DoubleType()
+    return T.ArrayType(elem, containsNull=False)
+
+
+def matmul_batch(Q: np.ndarray, C: np.ndarray, out_np) -> pa.ListArray:
+    """One query batch -> its ``array<float|double>`` column of all-pairs
+    dot products (one flat (n, n_corpus) values buffer)."""
+    list_type = to_arrow_type(_matmul_type(out_np))
+    S = K.similarity_matrix(Q.astype(out_np, copy=False), C.astype(out_np, copy=False), "dot")
+    values = pa.array(S.ravel().astype(out_np, copy=False), type=list_type.value_type)
+    return rows_to_list_array(values, len(Q), list_type)
+
+
+def map_arrow_batches(
+    df: DataFrame,
+    emb_col: str,
+    M: np.ndarray,
+    batch_fn,
+    out_field: T.StructField,
+    dtype=None,
+    row_width: int = 1,
+) -> DataFrame:
+    """The one ``mapInArrow`` plumbing behind every batch kernel over an
+    embedding column: broadcast ``M``, decode each batch's ``emb_col``
+    with :func:`arrow_list_to_matrix` (in ``dtype``, if given), and
+    emit ``batch_fn(Q, M)`` as ``out_field`` in place of ``emb_col``;
+    all other columns pass through unchanged.
+
+    ``row_width`` is the number of list elements each output row
+    carries: Spark only accepts 32-bit-offset lists from mapInArrow, so
+    rows per emitted batch are capped to keep ``n * row_width`` under
+    2^31.
+    """
+    bc = _active_sc().broadcast(M)
+    passthrough = [f.name for f in df.schema.fields if f.name != emb_col]
+    out_schema = T.StructType(
+        [f for f in df.schema.fields if f.name != emb_col] + [out_field]
+    )
+    names = passthrough + [out_field.name]
+    step = max(1, (2**31 - 2) // max(row_width, 1))
+
+    def fn(batches):
+        M = bc.value
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            Q = arrow_list_to_matrix(rb.column(emb_col), dtype, expected_dim=M.shape[1])
+            for lo in range(0, rb.num_rows, step):
+                sub = rb.slice(lo, step)
+                out = batch_fn(Q[lo : lo + sub.num_rows], M)
+                yield pa.RecordBatch.from_arrays(
+                    [sub.column(name) for name in passthrough] + [out], names=names
+                )
+
+    return df.mapInArrow(fn, out_schema)
 
 
 def topk(col, corpus, k: int, metric: str = "cosine") -> Column:
@@ -161,23 +268,16 @@ def topk(col, corpus, k: int, metric: str = "cosine") -> Column:
     bc = _active_sc().broadcast(mat)
     kk = int(k)
 
-    @F.pandas_udf(TOPK_TYPE)
-    def _topk_udf(s: pd.Series) -> pd.Series:
+    def _topk_udf(arr: pa.Array) -> pa.Array:
         C = bc.value
-        Q = _batch_to_matrix(s)  # keep native dtype: f32 stays f32
-        if Q.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        # f32 kernel iff BOTH sides f32 (src/matmul.rs:307-314)
-        Q = Q.astype(K.promote_dtype(Q.dtype, C.dtype), copy=False)
-        idx, sc = K.topk(Q, C, kk, metric)
-        return pd.Series(
-            [
-                [{"index": int(i), "score": float(v)} for i, v in zip(row_i, row_s)]
-                for row_i, row_s in zip(idx, sc)
-            ]
-        )
+        Q = arrow_list_to_matrix(arr, expected_dim=C.shape[1])
+        return topk_batch(Q, C, kk, metric)
 
-    return _topk_udf(col)
+    return F.arrow_udf(_topk_udf, TOPK_TYPE)(col)
+
+
+def _matmul_out_dtype(input_is_f32: bool, mat: np.ndarray):
+    return K.promote_dtype(np.float32 if input_is_f32 else np.float64, mat.dtype)
 
 
 def matmul(col, corpus, flatten: bool = False, input_is_f32: bool = False) -> Column:
@@ -206,21 +306,14 @@ def matmul(col, corpus, flatten: bool = False, input_is_f32: bool = False) -> Co
         return F.explode(matmul(col, corpus, input_is_f32=input_is_f32))
     mat = corpus_to_matrix(corpus)
     bc = _active_sc().broadcast(mat)
-    out_np = K.promote_dtype(
-        np.float32 if input_is_f32 else np.float64, mat.dtype
-    )
-    out_elem = T.FloatType() if out_np == np.float32 else T.DoubleType()
+    out_np = _matmul_out_dtype(input_is_f32, mat)
 
-    @F.pandas_udf(T.ArrayType(out_elem, containsNull=False))
-    def _matmul_udf(s: pd.Series) -> pd.Series:
+    def _matmul_udf(arr: pa.Array) -> pa.Array:
         C = bc.value
-        Q = _batch_to_matrix(s, out_np)
-        if Q.shape[0] == 0:
-            return pd.Series([], dtype=object)
-        S = K.similarity_matrix(Q, C.astype(out_np, copy=False), "dot")
-        return pd.Series(list(S.astype(out_np, copy=False)))
+        Q = arrow_list_to_matrix(arr, out_np, expected_dim=C.shape[1])
+        return matmul_batch(Q, C, out_np)
 
-    return _matmul_udf(col)
+    return F.arrow_udf(_matmul_udf, _matmul_type(out_np))(col)
 
 
 def matmul_flatten(
@@ -269,52 +362,6 @@ def matmul_flatten_series(
     ).select(out_col)
 
 
-def _arrow_list_to_matrix(arr, dtype=None, expected_dim=None) -> np.ndarray:
-    """Arrow list column -> dense (n, d) matrix, reading the flat child
-    buffer directly — the closest Spark gets to the reference's
-    zero-copy contiguous extraction (src/matmul.rs:21-95): one
-    ``reshape`` over the values buffer, no pandas, no per-row objects.
-    Falls back to the careful row loop for ragged/null rows.
-    """
-    import pyarrow as pa
-
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    n = len(arr)
-    if n == 0:
-        return np.empty((0, 0), dtype=dtype or np.float64)
-    offsets = arr.offsets.to_numpy()
-    widths = np.diff(offsets)
-    if arr.null_count == 0 and arr.values.null_count == 0 and (widths == widths[0]).all():
-        values = arr.values.to_numpy(zero_copy_only=True)
-        mat = values[offsets[0] : offsets[-1]].reshape(n, int(widths[0]))
-        if dtype is not None:
-            mat = mat.astype(dtype, copy=False)
-        elif not np.issubdtype(mat.dtype, np.floating):
-            mat = mat.astype(np.float64)
-        return mat
-    # distributed deviation from the reference's "First element is
-    # null" rule (src/matmul.rs:238): a partition-local batch can start
-    # with a null row even when the dataset has valid rows, so the
-    # width is inferred from the first VALID row; only an all-null
-    # batch is unrecoverable.
-    rows = arr.to_pylist()
-    first_valid = next((r for r in rows if r is not None), None)
-    if first_valid is None:
-        # an entirely-null batch: the width comes from the corpus when
-        # the caller knows it (null vectors are zero vectors per
-        # src/matmul.rs:251); without it the batch is unrecoverable
-        if expected_dim is None:
-            raise ValueError("First element is null")
-        return np.zeros((n, expected_dim), dtype=dtype or np.float64)
-    if rows[0] is None:
-        rows = [first_valid] + rows[1:]
-        mat = K.to_matrix(rows, dtype=dtype)
-        mat[0, :] = 0.0
-        return mat
-    return K.to_matrix(rows, dtype=dtype)
-
-
 def topk_arrow(
     df: DataFrame,
     emb_col: str,
@@ -323,67 +370,25 @@ def topk_arrow(
     metric: str = "cosine",
     out_col: str = "matches",
 ) -> DataFrame:
-    """Fused top-k as a ``mapInArrow`` transform — same semantics and
-    output schema as :func:`topk`, minus the pandas layer.
-
-    The pandas-UDF path pays two per-row costs at reference shapes
-    (1000 x 10000 x 256): Arrow -> pandas object-Series materialization
-    on input, and a Python list-of-dicts per row on output. Here the
-    query batch is read straight off the Arrow list buffer (one
-    reshape) and the result is assembled as flat index/score buffers +
-    a ListArray offset vector — zero per-row Python. This is the
-    engine's fast kernel path; ``topk`` remains the Column-level
-    ergonomic form (and the `.pmm` namespace maps to it).
-
-    All non-embedding columns pass through unchanged.
+    """Fused top-k as a ``mapInArrow`` transform — the same batch
+    function, semantics and output type as :func:`topk`, with
+    ``out_col`` replacing ``emb_col`` and every other column passed
+    through. The DataFrame form skips the per-row UDF projection the
+    Column form pays, so it is the engine's fast kernel path; ``topk``
+    remains the Column-level ergonomic form (and the `.pmm` namespace
+    maps to it).
     """
-    import pyarrow as pa
-
     K._canonical_metric(metric)
     mat = corpus_to_matrix(corpus)
-    bc = _active_sc().broadcast(mat)
     kk = int(k)
-    passthrough = [f.name for f in df.schema.fields if f.name != emb_col]
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != emb_col]
-        + [T.StructField(out_col, TOPK_TYPE, False)]
+    return map_arrow_batches(
+        df,
+        emb_col,
+        mat,
+        lambda Q, C: topk_batch(Q, C, kk, metric),
+        T.StructField(out_col, TOPK_TYPE, False),
+        row_width=kk,
     )
-
-    def fn(batches):
-        C = bc.value
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            # no nan_to_num here: unlike the pandas path, Arrow keeps
-            # null elements distinct from NaN values — the fallback in
-            # _arrow_list_to_matrix zeroes genuine nulls, and data NaNs
-            # propagate into the NaN-safe topk exactly like the
-            # reference (src/topk.rs:19-29)
-            Q = _arrow_list_to_matrix(
-                rb.column(rb.schema.get_field_index(emb_col)),
-                expected_dim=C.shape[1],
-            )
-            Q = Q.astype(K.promote_dtype(Q.dtype, C.dtype), copy=False)
-            idx, sc = K.topk(Q, C, kk, metric)
-            kreal = idx.shape[1]
-            struct = pa.StructArray.from_arrays(
-                [
-                    pa.array(idx.ravel(), type=pa.int64()),
-                    pa.array(sc.ravel(), type=pa.float64()),
-                ],
-                ["index", "score"],
-            )
-            offs = pa.array(
-                np.arange(0, n * kreal + 1, kreal, dtype=np.int32), type=pa.int32()
-            )
-            matches = pa.ListArray.from_arrays(offs, struct)
-            cols = [
-                rb.column(rb.schema.get_field_index(name)) for name in passthrough
-            ]
-            yield pa.RecordBatch.from_arrays(cols + [matches], names=passthrough + [out_col])
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def matmul_arrow(
@@ -393,59 +398,23 @@ def matmul_arrow(
     input_is_f32: bool = False,
     out_col: str = "scores",
 ) -> DataFrame:
-    """All-pairs matmul as a ``mapInArrow`` transform — same semantics
-    as :func:`matmul`, with the (n, n_corpus) score matrix emitted as
-    ONE flat Arrow values buffer + an offsets vector instead of a
-    pandas Series of per-row ndarrays. At reference shapes the output
-    is the dominant cost (1000 x 10000 floats), so skipping the
-    per-row object layer is the big win.
+    """All-pairs matmul as a ``mapInArrow`` transform — the same batch
+    function, semantics and output type as :func:`matmul`, with
+    ``out_col`` replacing ``emb_col`` and every other column passed
+    through. The (n, n_corpus) score matrix leaves each batch as ONE
+    flat Arrow values buffer plus an offsets vector.
     """
-    import pyarrow as pa
-
     mat = corpus_to_matrix(corpus)
-    bc = _active_sc().broadcast(mat)
-    out_np = K.promote_dtype(
-        np.float32 if input_is_f32 else np.float64, mat.dtype
+    out_np = _matmul_out_dtype(input_is_f32, mat)
+    return map_arrow_batches(
+        df,
+        emb_col,
+        mat,
+        lambda Q, C: matmul_batch(Q, C, out_np),
+        T.StructField(out_col, _matmul_type(out_np), False),
+        dtype=out_np,
+        row_width=mat.shape[0],
     )
-    pa_elem = pa.float32() if out_np == np.float32 else pa.float64()
-    out_elem = T.FloatType() if out_np == np.float32 else T.DoubleType()
-    passthrough = [f.name for f in df.schema.fields if f.name != emb_col]
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != emb_col]
-        + [T.StructField(out_col, T.ArrayType(out_elem, containsNull=False), False)]
-    )
-
-    def fn(batches):
-        C = bc.value.astype(out_np, copy=False)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            Q = _arrow_list_to_matrix(
-                rb.column(rb.schema.get_field_index(emb_col)),
-                out_np,
-                expected_dim=C.shape[1],
-            )
-            n_c = C.shape[0]
-            # Spark only accepts 32-bit-offset List from mapInArrow, so
-            # cap rows-per-emitted-batch to keep n*n_c under 2^31
-            step = max(1, (2**31 - 2) // max(n_c, 1))
-            for lo in range(0, rb.num_rows, step):
-                sub = rb.slice(lo, step)
-                n = sub.num_rows
-                S = K.similarity_matrix(Q[lo : lo + n], C, "dot")
-                values = pa.array(S.ravel().astype(out_np, copy=False), type=pa_elem)
-                offs = pa.array(
-                    np.arange(0, n * n_c + 1, n_c, dtype=np.int32), type=pa.int32()
-                )
-                scores = pa.ListArray.from_arrays(offs, values)
-                cols = [
-                    sub.column(sub.schema.get_field_index(name)) for name in passthrough
-                ]
-                yield pa.RecordBatch.from_arrays(
-                    cols + [scores], names=passthrough + [out_col]
-                )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def topk_exploded(

@@ -3,8 +3,9 @@
 Replicates the semantics of the reference's native kernels
 (reference: ``src/metrics.rs``, ``src/topk.rs``, ``src/matmul.rs`` in
 NivekNey/polars-matmul) without any Spark dependency, so they are
-unit-testable standalone and reusable from pandas UDFs, ``mapInPandas``
-batches, and the benchmark harness.
+unit-testable standalone and reusable from the Arrow batch functions
+(``functions.similarity``), the blocked join's ``mapInArrow`` stage,
+and the benchmark harness.
 
 Semantics preserved exactly (cited against the reference):
 

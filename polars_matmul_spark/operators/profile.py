@@ -134,6 +134,14 @@ def profile_pair_one_scan(
     source is scanned once instead of once per side. The 1-row agg is
     lazily pinned so both returned frames read one materialization."""
     fields = {f.name: f.dataType for f in ab.schema.fields}
+    a_names = [a_prefix + c for c in a_cols]
+    b_names = [b_prefix + c for c in b_cols]
+    unknown = [c for c in a_names + b_names if c not in fields]
+    if unknown:
+        raise ValueError(f"no such columns: {unknown}")
+    shared = sorted(set(a_names) & set(b_names))
+    if shared:
+        raise ValueError(f"columns on both sides: {shared}")
     one = ab.agg(
         F.count(F.lit(1)).alias("__n"),
         *_profile_aggs(fields, a_cols, a_prefix),

@@ -27,12 +27,14 @@ partitioning, same output):
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from polars_matmul_spark.functions.similarity import (
-    _active_sc,
-    _arrow_list_to_matrix,
+    map_arrow_batches,
+    rows_to_list_array,
 )
 
 __all__ = [
@@ -63,46 +65,19 @@ def gaussian_matrix(in_dim: int, out_dim: int, seed: int = 7) -> np.ndarray:
     ).astype(np.float32)
 
 
-def _project_arrow(
-    df: DataFrame,
-    emb_col: str,
-    P: np.ndarray,
-    out_col: str,
-    emit,
-    out_field: T.StructField,
-) -> DataFrame:
-    """Shared mapInArrow plumbing: batch GEMM against broadcast ``P``,
-    then ``emit(Y, pa)`` turns the (n, out_dim) float32 score block
-    into the output Arrow array."""
-    import pyarrow as pa  # noqa: F401  (emit closures use the module)
-
-    bc = _active_sc().broadcast(P)
-    passthrough = [f.name for f in df.schema.fields if f.name != emb_col]
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name != emb_col] + [out_field]
+def _project(df, emb_col, P, emit, out_field, row_width=1) -> DataFrame:
+    """Batch GEMM against the broadcast ``P`` through the shared
+    mapInArrow plumbing; ``emit(Y)`` turns the (n, out_dim) float32
+    projection block into the output Arrow array."""
+    return map_arrow_batches(
+        df,
+        emb_col,
+        P,
+        lambda Q, P: emit(Q @ P.T),
+        out_field,
+        dtype=np.float32,
+        row_width=row_width,
     )
-
-    def fn(batches):
-        import pyarrow as pa
-
-        M = bc.value
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            Q = _arrow_list_to_matrix(
-                rb.column(rb.schema.get_field_index(emb_col)),
-                np.float32,
-                expected_dim=M.shape[1],
-            )
-            Y = Q @ M.T
-            cols = [
-                rb.column(rb.schema.get_field_index(name)) for name in passthrough
-            ]
-            yield pa.RecordBatch.from_arrays(
-                cols + [emit(Y, pa)], names=passthrough + [out_col]
-            )
-
-    return df.mapInArrow(fn, out_schema)
 
 
 def random_project(
@@ -131,19 +106,14 @@ def random_project(
     in_dim = _peek_dim(df, emb_col)
     P = gaussian_matrix(in_dim, out_dim, seed)
 
-    def emit(Y, pa):
-        n = Y.shape[0]
-        values = pa.array(Y.ravel(), type=pa.float32())
-        offs = pa.array(
-            np.arange(0, (n + 1) * out_dim, out_dim, dtype=np.int32),
-            type=pa.int32(),
-        )
-        return pa.ListArray.from_arrays(offs, values)
+    out_type = T.ArrayType(T.FloatType(), containsNull=False)
+    list_type = to_arrow_type(out_type)
 
-    field = T.StructField(
-        out_col, T.ArrayType(T.FloatType(), containsNull=False), False
-    )
-    return _project_arrow(df, emb_col, P, out_col, emit, field)
+    def emit(Y):
+        return rows_to_list_array(pa.array(Y.ravel(), type=pa.float32()), len(Y), list_type)
+
+    field = T.StructField(out_col, out_type, False)
+    return _project(df, emb_col, P, emit, field, row_width=out_dim)
 
 
 def srp_bits(
@@ -168,12 +138,12 @@ def srp_bits(
     P = gaussian_matrix(in_dim, n_bits, seed)
     weights = (1 << np.arange(n_bits, dtype=np.int64))
 
-    def emit(Y, pa):
+    def emit(Y):
         sig = (Y > 0).astype(np.int64) @ weights
         return pa.array(sig, type=pa.int64())
 
     field = T.StructField(out_col, T.LongType(), False)
-    return _project_arrow(df, emb_col, P, out_col, emit, field)
+    return _project(df, emb_col, P, emit, field)
 
 
 def srp_band_plan(
@@ -275,16 +245,14 @@ def srp_signature(
     P = gaussian_matrix(in_dim, n_bands * band_bits, seed)
     weights = 1 << np.arange(band_bits, dtype=np.int64)
 
-    def emit(Y, pa):
+    out_type = T.ArrayType(T.LongType(), containsNull=False)
+    list_type = to_arrow_type(out_type)
+
+    def emit(Y):
         bits = (Y > 0).astype(np.int64)
         # (n, n_bands, band_bits) -> one packed int64 per band
         vals = bits.reshape(len(bits), n_bands, band_bits) @ weights
-        flat = pa.array(vals.ravel(), type=pa.int64())
-        offs = pa.array(
-            np.arange(0, (len(bits) + 1) * n_bands, n_bands, dtype=np.int32),
-            type=pa.int32(),
-        )
-        return pa.ListArray.from_arrays(offs, flat)
+        return rows_to_list_array(pa.array(vals.ravel(), type=pa.int64()), len(bits), list_type)
 
     if catalyst:
         # the projection matrix rides as DATA (one broadcast row), not
@@ -335,12 +303,8 @@ def srp_signature(
                 ).otherwise(F.lit(0)).cast("long")
             band_exprs.append(val)
         return staged.select(F.col(id_col), F.array(*band_exprs).alias(out_col))
-    field = T.StructField(
-        out_col, T.ArrayType(T.LongType(), containsNull=False), False
-    )
-    return _project_arrow(
-        df.select(id_col, emb_col), emb_col, P, out_col, emit, field
-    )
+    field = T.StructField(out_col, out_type, False)
+    return _project(df.select(id_col, emb_col), emb_col, P, emit, field, row_width=n_bands)
 
 
 def srp_neardup(

@@ -14,12 +14,13 @@ envelopes, all pure Catalyst plans or Arrow-batched kernels:
    Envelope: n_q * n_c pairs materialize — fine up to ~10^8 pairs.
 
 2. ``topk_join_blocked`` — the large-corpus exact path: queries are
-   collected+broadcast (they are the small side in retrieval), the
-   corpus stays fully distributed; each corpus partition computes a
-   local per-query top-k with the NumPy kernel via ``mapInPandas``
-   (BLAS, Arrow batches), emitting <= n_q * k candidate rows per
-   partition; a final window merge keeps the global top-k. Shuffle
-   volume is O(n_q * k * n_partitions) — independent of corpus size.
+   collected as Arrow and broadcast (they are the small side in
+   retrieval), the corpus stays fully distributed; each corpus Arrow
+   batch is decoded by the shared list decoder and scored against the
+   queries with the NumPy kernel inside ``mapInArrow`` (BLAS),
+   emitting <= n_q * k candidate rows per batch; a final window merge
+   keeps the global top-k. Shuffle volume is O(n_q * k * n_batches) —
+   independent of corpus size.
    Envelope: corpus unbounded (scales linearly with executors),
    queries must fit in a broadcast (~10^6 rows of d=256 is ~1 GB).
 
@@ -30,11 +31,12 @@ envelopes, all pure Catalyst plans or Arrow-batched kernels:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_matmul_spark import kernels as K
+from polars_matmul_spark.functions.similarity import arrow_list_to_matrix
 
 __all__ = ["score_expr", "similarity_join_exact", "topk_join_exact", "topk_join_blocked"]
 
@@ -171,9 +173,11 @@ def topk_join_blocked(
 
     Plan shape::
 
+        queries.toArrow() -> decode -> broadcast (qids, Q)
         corpus scan (distributed, columnar)
-          -> mapInPandas: local NumPy-kernel topk per Arrow batch
-             (emits <= n_q * k rows per batch)
+          -> mapInArrow: decode the batch's embedding list column,
+             local NumPy-kernel topk, emit flat (q_id, c_id, score)
+             buffers (<= n_q * k rows per batch)
           -> window merge: global top-k per query
 
     The map stage is embarrassingly parallel; the only shuffle carries
@@ -184,9 +188,9 @@ def topk_join_blocked(
     """
     metric = K._canonical_metric(metric)
     spark = queries.sparkSession
-    qpdf = queries.select(q_id, q_col).toPandas()
-    Q = K.to_matrix(qpdf[q_col].tolist())
-    qids = qpdf[q_id].to_numpy()
+    qtbl = queries.select(q_id, q_col).toArrow()
+    Q = arrow_list_to_matrix(qtbl.column(q_col))
+    qids = qtbl.column(q_id).to_numpy()
     if Q.shape[0] == 0:
         raise ValueError("Empty series: query side has no rows")
     bc = spark.sparkContext.broadcast((qids, Q))
@@ -196,23 +200,24 @@ def topk_join_blocked(
 
     def local_topk(batches):
         qids_b, Qb = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            C = K.to_matrix(pdf[c_col].tolist())
+            C = arrow_list_to_matrix(rb.column(c_col), expected_dim=Qb.shape[1])
             S = K.similarity_matrix(Qb.astype(K.promote_dtype(Qb.dtype, C.dtype)), C, metric)
             idx, sc = K.topk_select(S, min(k, C.shape[0]), higher)
-            cids = pdf[c_id].to_numpy()
+            cids = rb.column(c_id).to_numpy(zero_copy_only=False)
             n_q, kk = idx.shape
-            yield pd.DataFrame(
-                {
-                    q_id: np.repeat(qids_b, kk),
-                    c_id: cids[idx.ravel()],
-                    "score": sc.ravel().astype(np.float64),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(qids_b, kk), type=pa.int64()),
+                    pa.array(cids[idx.ravel()], type=pa.int64()),
+                    pa.array(sc.ravel().astype(np.float64), type=pa.float64()),
+                ],
+                names=[q_id, c_id, "score"],
             )
 
-    candidates = corpus.select(c_id, c_col).mapInPandas(local_topk, schema=out_schema)
+    candidates = corpus.select(c_id, c_col).mapInArrow(local_topk, schema=out_schema)
     direction = (
         [F.col("score").desc(), F.col(c_id).asc()]
         if higher

@@ -16,6 +16,21 @@ from pyspark.sql import SparkSession
 _WORKER_BLAS = os.environ.get("SPARK_GRAFT_WORKER_BLAS_THREADS", "1")
 
 
+def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """min(48g, half of the host's ``MemTotal``). In local mode the
+    driver JVM hosts the executors too; a fixed 48g heap on a 15 GB
+    host let the JVM grow until the kernel OOM-killed it. Falls back to
+    48g where ``meminfo`` is unreadable."""
+    cap_mb = 48 * 1024
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "48g"
+    half_mb = kb // 2048
+    return "48g" if half_mb >= cap_mb else f"{half_mb}m"
+
+
 def get_spark(app_name: str = "polars_matmul_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -40,7 +55,10 @@ def get_spark(app_name: str = "polars_matmul_spark", shuffle_partitions: int | N
         # driver testdata stores TIMESTAMP(NANOS) which Spark cannot read
         # natively; read as long and convert in sources.tables.load_table
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # each Spark task owns ~1 core, so worker-side BLAS must be
         # single-threaded: with N parallel python workers each spawning

@@ -1099,12 +1099,12 @@ def _fd_stage_union_epochs(spark, state_root):
     planned 12 parquet read-backs and a 12-branch union here). A
     missing stage root, or a missing ``epoch=N`` under it, reproduces
     the documented "stage emitted nothing" absence exactly: no rows
-    for that (stage, epoch)."""
+    for that (stage, epoch). Any other read failure (a corrupt footer,
+    an unreadable root) raises rather than reading as "no rows"."""
     import os
 
-    from pyspark.errors import AnalysisException
-
     from polars_matmul_spark.streaming.front_door import STAGE_DIRS
+    from polars_matmul_spark.streaming.hygiene import read_or_empty
 
     ep_schema = {
         "head": "doc_id long",
@@ -1117,15 +1117,7 @@ def _fd_stage_union_epochs(spark, state_root):
 
     def _ep(key):
         path = os.path.join(state_root, STAGE_DIRS[key])
-        try:
-            df = spark.read.parquet(path)
-        except AnalysisException:
-            df = None
-        if df is None or "epoch" not in df.columns:
-            return spark.createDataFrame(
-                [], ep_schema[key] + ", epoch long"
-            )
-        return df
+        return read_or_empty(spark, path, ep_schema[key] + ", epoch long")
 
     def _stage(df, name, fp=None, n_hits=None):
         return df.select(

@@ -388,10 +388,6 @@ class TestSrpNeardup:
         )
 
         def n_cand(band_bits, n_bands):
-            from polars_matmul_spark.operators.projection import (
-                _peek_dim,
-                _project_arrow,
-            )
             # count candidates via the operator with threshold -1 so
             # the verify filter keeps every banded pair
             return srp_neardup(

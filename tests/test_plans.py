@@ -42,7 +42,7 @@ def test_exact_dedup_is_single_shuffle(spark, sf_dir):
 
 def test_filter_pushed_below_kernel_udf(spark, sf_dir):
     # is_elementwise analog: a filter on an input column added AFTER the
-    # pandas-UDF column must still reach the parquet scan
+    # Arrow-UDF kernel column must still reach the parquet scan
     from polars_matmul_spark.functions import topk
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -52,6 +52,19 @@ def test_filter_pushed_below_kernel_udf(spark, sf_dir):
     )
     plan = explain_str(df)
     assert "LessThan(vec_id,10)" in plan, "filter not pushed below the kernel UDF"
+
+
+def test_blocked_topk_map_stage_is_arrow(spark):
+    # the blocked corpus path feeds the kernel through mapInArrow, not
+    # a pandas conversion of every corpus batch
+    from polars_matmul_spark.operators.similarity_join import topk_join_blocked
+
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "query_id long, embedding array<double>")
+    c = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(4)], "corpus_id long, embedding array<double>"
+    )
+    plan = explain_str(topk_join_blocked(q, c, k=2), "simple")
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_dedup_and_text_plans_stay_jvm_side(spark, sf_dir):
@@ -134,6 +147,20 @@ def test_range_join_is_equi_not_nested_loop(spark, sf_dir):
 def test_aqe_and_arrow_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+
+
+def test_default_driver_memory_is_half_memtotal_capped(tmp_path):
+    from polars_matmul_spark.plans.session import _default_driver_memory
+
+    def meminfo(text):
+        p = tmp_path / "meminfo"
+        p.write_text(text)
+        return str(p)
+
+    # 15 GiB host -> 7.5 GiB heap; 256 GiB host -> the 48g cap
+    assert _default_driver_memory(meminfo("MemTotal:       15728640 kB\n")) == "7680m"
+    assert _default_driver_memory(meminfo("MemFree: 1 kB\nMemTotal: 268435456 kB\n")) == "48g"
+    assert _default_driver_memory(str(tmp_path / "missing")) == "48g"
 
 
 def test_hash_split_is_narrow_and_jvm_side(spark, sf_dir):

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from polars_matmul_spark.operators.packing import materialize_bins, pack_sequences
-from polars_matmul_spark.operators.profile import profile_table
+from polars_matmul_spark.operators.profile import profile_pair_one_scan, profile_table
 from polars_matmul_spark.operators.text import token_count
 from polars_matmul_spark.sources.tables import load_table
 
@@ -60,6 +60,16 @@ class TestProfile:
         assert prof.loc["embedding", "n_nulls"] == 0
         with pytest.raises(ValueError, match="no such columns"):
             profile_table(emb, ["nope"])
+
+    def test_pair_one_scan_rejects_missing_column(self, spark):
+        ab = spark.createDataFrame([(1, 2)], "__a_x long, __b_x long")
+        with pytest.raises(ValueError, match=r"no such columns: \['__b_y'\]"):
+            profile_pair_one_scan(ab, ["x"], ["y"])
+
+    def test_pair_one_scan_rejects_overlapping_sides(self, spark):
+        ab = spark.createDataFrame([(1, 2)], "p_x long, p_y long")
+        with pytest.raises(ValueError, match="columns on both sides"):
+            profile_pair_one_scan(ab, ["x", "y"], ["y"], a_prefix="p_", b_prefix="p_")
 
 
 class TestMaterializeBins:

@@ -9,6 +9,7 @@ import gzip
 import io
 import lzma
 import tarfile
+import time
 import zipfile
 
 import pytest
@@ -21,21 +22,37 @@ from polars_matmul_spark.operators.rawbytes import (
 )
 
 
+# Archive headers carry a timestamp (zip entry date, gzip mtime). A fixed
+# one keeps the payloads, and the test ids pytest derives from them,
+# the same on every run.
+_MTIME = 1792205650
+_DATE_TIME = time.gmtime(_MTIME)[:6]
+
+
 def _zip(members: dict[str, bytes]) -> bytes:
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
         for name, data in members.items():
-            zf.writestr(name, data)
+            zi = zipfile.ZipInfo(name, date_time=_DATE_TIME)
+            zi.compress_type = zipfile.ZIP_DEFLATED
+            zi.external_attr = 0o600 << 16
+            zf.writestr(zi, data)
     return buf.getvalue()
 
 
 def _tar(members: dict[str, bytes], mode="w") -> bytes:
     buf = io.BytesIO()
-    with tarfile.open(fileobj=buf, mode=mode) as tf:
+    gz = None
+    if mode == "w:gz":
+        gz = gzip.GzipFile(fileobj=buf, mode="wb", mtime=_MTIME)
+        mode = "w"
+    with tarfile.open(fileobj=gz or buf, mode=mode) as tf:
         for name, data in members.items():
             ti = tarfile.TarInfo(name)
             ti.size = len(data)
             tf.addfile(ti, io.BytesIO(data))
+    if gz is not None:
+        gz.close()
     return buf.getvalue()
 
 

@@ -1,8 +1,11 @@
-"""Integration tests for the pandas-UDF similarity path, porting the
-reference's test suite (tests/test_polars_matmul.py, 6 classes) to
+"""Integration tests for the broadcast-corpus similarity surface, porting
+the reference's test suite (tests/test_polars_matmul.py, 6 classes) to
 Spark: semantics per metric, explode/unnest composition, k-clamp,
 join-back, NumPy oracle, error surface, f32 support, and composition
-with filter/select/sort/limit/group-by under the lazy optimizer.
+with filter/select/sort/limit/group-by under the lazy optimizer. The
+Column forms (Arrow UDFs) and the ``mapInArrow`` DataFrame forms share
+one decoder and one per-batch function per operator; ``TestArrowPaths``
+and ``TestNullRule`` pin that they agree.
 """
 
 import numpy as np
@@ -189,7 +192,6 @@ class TestFloat32:
             got = [m["score"] for m in r.m]
             np.testing.assert_allclose(got, expect, rtol=1e-4)
 
-    @pytest.mark.slow
     def test_pmm_namespace_mirrors_reference_call_shape(self, spark):
         # the reference's documented call shape (README.md:50-52):
         #   queries.with_columns(pl.col("embedding").pmm.topk(corpus, k=2))
@@ -244,9 +246,9 @@ class TestFloat32:
 
 
 class TestArrowPaths:
-    """mapInArrow kernel forms must equal the pandas-UDF forms exactly
-    (same kernel, same promotion, same declared schema) — they are the
-    perf path, not a semantic variant."""
+    """mapInArrow kernel forms must equal the Column (Arrow UDF) forms
+    exactly (same batch function, same promotion, same declared schema)
+    — they are the perf path, not a semantic variant."""
 
     @pytest.fixture(scope="class")
     def f32_df(self, spark):
@@ -258,7 +260,7 @@ class TestArrowPaths:
         ).coalesce(2)
         return df.cache()
 
-    def test_topk_arrow_equals_pandas_udf(self, spark, f32_df):
+    def test_topk_arrow_equals_column_topk(self, spark, f32_df):
         from polars_matmul_spark.functions import topk_arrow
 
         rng = np.random.default_rng(8)
@@ -276,7 +278,7 @@ class TestArrowPaths:
                 (d["index"], d["score"]) for d in b
             ]
 
-    def test_matmul_arrow_equals_pandas_udf_and_dtype(self, spark, f32_df):
+    def test_matmul_arrow_equals_column_matmul_and_dtype(self, spark, f32_df):
         from polars_matmul_spark.functions import matmul_arrow
 
         rng = np.random.default_rng(9)
@@ -316,6 +318,68 @@ class TestArrowPaths:
         assert all(len(r.matches) == 3 for r in rows)
         assert rows[0].matches[0]["score"] == 1.0
         assert all(m["score"] == 0.0 for m in rows[1].matches)
+
+
+class TestNullRule:
+    """One null rule for every kernel entry form, the Arrow decoder's:
+    a null vector is the zero vector (src/matmul.rs:251) and a data NaN
+    propagates into the NaN-safe top-k as in the reference
+    (src/topk.rs:19-29) — also when a batch starts with a null row."""
+
+    Q = [None, [1.0, 2.0, 0.5], [0.5, float("nan"), 1.0], [-1.0, 0.0, 2.0]]
+    C = np.array(
+        [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0], [1.0, 1.0, 1.0]]
+    )
+    TOP_K = 2
+
+    def _run(self, spark, path):
+        from polars_matmul_spark.functions import topk_arrow
+        from polars_matmul_spark.operators.similarity_join import topk_join_blocked
+
+        # one partition, so the kernel's batch starts with the null row
+        df = spark.createDataFrame(
+            list(enumerate(self.Q)), "query_id long, embedding array<double>"
+        ).coalesce(1)
+        if path == "topk_join_blocked":
+            corpus = spark.createDataFrame(
+                [(i, c.tolist()) for i, c in enumerate(self.C)],
+                "corpus_id long, embedding array<double>",
+            )
+            pdf = (
+                topk_join_blocked(df, corpus, k=self.TOP_K, metric="dot")
+                .toPandas()
+                .sort_values(["query_id", "rank"])
+            )
+            shape = (len(self.Q), self.TOP_K)
+            return (
+                pdf["corpus_id"].to_numpy().reshape(shape),
+                pdf["score"].to_numpy().reshape(shape),
+            )
+        if path == "pmm_topk":
+            out = df.select(
+                "query_id",
+                F.col("embedding").pmm.topk(self.C, k=self.TOP_K, metric="dot").alias("m"),
+            )
+        else:
+            out = topk_arrow(df, "embedding", self.C, k=self.TOP_K, metric="dot", out_col="m")
+        rows = out.orderBy("query_id").collect()
+        idx = np.array([[m["index"] for m in r.m] for r in rows])
+        sc = np.array([[m["score"] for m in r.m] for r in rows])
+        return idx, sc
+
+    @pytest.mark.parametrize("path", ["pmm_topk", "topk_arrow", "topk_join_blocked"])
+    def test_agrees_with_kernel(self, spark, path):
+        from polars_matmul_spark import kernels as K
+
+        ref_q = np.array([[0.0, 0.0, 0.0]] + self.Q[1:])
+        ref_idx, ref_sc = K.topk(ref_q, self.C, self.TOP_K, "dot")
+        idx, sc = self._run(spark, path)
+        # the NaN row's scores stay NaN (not zeroed); the null row scores 0
+        assert np.isnan(sc[2]).all()
+        assert (sc[0] == 0.0).all()
+        np.testing.assert_array_equal(sc, ref_sc)
+        # rows 1 and 3 have distinct scores, so their order is defined
+        np.testing.assert_array_equal(idx[[1, 3]], ref_idx[[1, 3]])
 
 
 class TestLazyComposition:

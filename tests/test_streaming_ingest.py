@@ -92,3 +92,30 @@ class TestDedupIngest:
         )
         assert df is not None and df.count() == 0
         assert _read_or_empty(spark, str(tmp_path / "nope2"), None) is None
+
+
+def test_stage_union_missing_stage_dirs_are_no_rows(spark, tmp_path):
+    # a stage that never wrote its root emitted nothing: zero rows
+    from polars_matmul_spark.queries_pipeline import _fd_stage_union_epochs
+
+    assert _fd_stage_union_epochs(spark, str(tmp_path)).count() == 0
+
+
+@pytest.mark.parametrize(
+    "name, payload",
+    [
+        ("part-00000.parquet", b"this is not parquet"),  # corrupt footer
+        ("_SUCCESS", b""),  # committed marker, no data: no schema to infer
+    ],
+)
+def test_stage_union_unreadable_stage_dir_raises(spark, tmp_path, name, payload):
+    # only a missing path means "no rows": a stage root that exists but
+    # cannot be read must fail the union, not read as an empty stage
+    from polars_matmul_spark.queries_pipeline import _fd_stage_union_epochs
+    from polars_matmul_spark.streaming.front_door import STAGE_DIRS
+
+    bad = tmp_path / STAGE_DIRS["head"] / "epoch=0"
+    bad.mkdir(parents=True)
+    (bad / name).write_bytes(payload)
+    with pytest.raises(Exception):
+        _fd_stage_union_epochs(spark, str(tmp_path)).count()
