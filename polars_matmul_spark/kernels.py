@@ -147,11 +147,18 @@ def similarity_matrix(Q: np.ndarray, C: np.ndarray, metric: str = "cosine") -> n
         cn = np.linalg.norm(C, axis=1)
         # per-norm guard: the score is 0.0 unless BOTH norms exceed eps
         # independently (q_norm > eps AND c_norm > eps) — NOT a guard on
-        # the product [src/metrics.rs:276-288 (f64), 329-342 (f32)]
-        valid = (qn > eps)[:, None] & (cn > eps)[None, :]
-        denom = np.where(valid, np.outer(qn, cn), 1.0)
-        out = np.where(valid, dots / denom, 0.0)
-        return out.astype(dt, copy=False)
+        # the product [src/metrics.rs:276-288 (f64), 329-342 (f32)].
+        # Divided in place; the guarded rows and columns (NaN norms
+        # included) are zeroed afterwards.
+        with np.errstate(divide="ignore", invalid="ignore"):
+            np.divide(dots, np.multiply.outer(qn, cn), out=dots)
+        q_bad = ~(qn > eps)
+        c_bad = ~(cn > eps)
+        if q_bad.any():
+            dots[q_bad, :] = 0.0
+        if c_bad.any():
+            dots[:, c_bad] = 0.0
+        return dots
     # euclidean: sqrt(max(0, |q|^2 + |c|^2 - 2 q.c)) [src/metrics.rs:292-310]
     q2 = np.einsum("ij,ij->i", Q, Q)
     c2 = np.einsum("ij,ij->i", C, C)

@@ -204,7 +204,9 @@ def topk_join_blocked(
             if rb.num_rows == 0:
                 continue
             C = arrow_list_to_matrix(rb.column(c_col), expected_dim=Qb.shape[1])
-            S = K.similarity_matrix(Qb.astype(K.promote_dtype(Qb.dtype, C.dtype)), C, metric)
+            # promoted once: every later batch finds Qb in the compute dtype
+            Qb = Qb.astype(K.promote_dtype(Qb.dtype, C.dtype), copy=False)
+            S = K.similarity_matrix(Qb, C, metric)
             idx, sc = K.topk_select(S, min(k, C.shape[0]), higher)
             cids = rb.column(c_id).to_numpy(zero_copy_only=False)
             n_q, kk = idx.shape

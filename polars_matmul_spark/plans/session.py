@@ -9,6 +9,8 @@ one profile.
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -101,6 +103,57 @@ def ship_package(spark: SparkSession) -> None:
     )
     sc.addPyFile(zip_path)
     sc._pmm_shipped = True
+
+
+def _in_python_worker() -> bool:
+    """True inside a PySpark worker while it runs a task (the worker
+    sets the TaskContext before it unpickles the task's functions)."""
+    from pyspark.taskcontext import TaskContext
+
+    return TaskContext.get() is not None
+
+
+def gate_zip_invalidation() -> bool:
+    """Re-read a zip archive's directory only when the archive changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. On CPython < 3.13 that makes each ``zipimporter``
+    re-read its archive's whole central directory; a worker holds ~16 of
+    them over ``pyspark.zip``, the py4j zip and the spark-core jar, and
+    the re-reads cost 0.1-0.5 s per task. Wrapped here, an importer
+    re-reads only when the archive's ``(st_ino, st_size, st_mtime_ns)``
+    differs from the one stamped at its last read; otherwise it takes
+    the shared ``_zip_directory_cache`` entry that read left. A new or
+    rewritten archive (a later ``addPyFile``) is still re-read, and the
+    original method runs whenever ``stat`` fails.
+
+    Acts only in a PySpark worker on Python < 3.13 (3.13 made the
+    invalidation lazy); returns whether the gate is in place."""
+    if sys.version_info >= (3, 13) or not _in_python_worker():
+        return False
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stat_gated", False):
+        return True
+    read_at: dict[str, tuple] = {}  # archive -> stat stamp of its last read
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            read_at.pop(self.archive, None)
+            return original(self)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        if cached is not None and read_at.get(self.archive) == stamp:
+            self._files = cached
+            return
+        # stamp taken before the read: a change during it re-reads next time
+        original(self)
+        read_at[self.archive] = stamp
+
+    invalidate_caches._stat_gated = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
 
 
 def stop_spark() -> None:

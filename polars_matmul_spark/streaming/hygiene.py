@@ -87,7 +87,13 @@ def commit_epoch_writes(*thunks) -> None:
     of them identically. Callers must pass writes with no data
     dependency on each other; shared lazily-pinned ancestors are safe
     (BlockManager's per-block get-or-compute locking computes each
-    partition once)."""
+    partition once).
+
+    A failing thunk does not cancel its siblings: they run to the end,
+    then the first failure (in argument order) re-raises. One epoch dir
+    can therefore be committed while another failed. That is safe only
+    because every write is overwrite-idempotent: the replay of the
+    failed epoch rewrites the committed dir identically."""
     if len(thunks) == 1:
         thunks[0]()
         return

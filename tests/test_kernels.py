@@ -194,6 +194,26 @@ class TestNumpyEquivalence:
         Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
         np.testing.assert_allclose(S, Qn @ Cn.T, rtol=1e-5)
 
+    @pytest.mark.parametrize("dtype", [np.float32, np.float64])
+    def test_cosine_bit_equal_to_guarded_where_formula(self, dtype):
+        # the per-norm guard written out with full-size temporaries is
+        # the reference; one zero-norm query row and one zero-norm
+        # corpus row exercise both zeroed directions
+        rng = np.random.default_rng(11)
+        Q = rng.standard_normal((7, 16)).astype(dtype)
+        C = rng.standard_normal((9, 16)).astype(dtype)
+        Q[2] = 0.0
+        C[4] = 0.0
+        eps = K.EPS_F32 if dtype == np.float32 else K.EPS_F64
+        qn, cn = np.linalg.norm(Q, axis=1), np.linalg.norm(C, axis=1)
+        valid = (qn > eps)[:, None] & (cn > eps)[None, :]
+        denom = np.where(valid, np.outer(qn, cn), 1.0)
+        expected = np.where(valid, (Q @ C.T) / denom, 0.0).astype(dtype, copy=False)
+        S = K.similarity_matrix(Q, C, "cosine")
+        assert S.dtype == dtype
+        assert np.array_equal(S, expected)
+        assert not S[2].any() and not S[:, 4].any()
+
     def test_matmul_vs_npdot(self):
         np.random.seed(42)
         Q = np.random.randn(10, 32)

@@ -119,3 +119,28 @@ def test_stage_union_unreadable_stage_dir_raises(spark, tmp_path, name, payload)
     (bad / name).write_bytes(payload)
     with pytest.raises(Exception):
         _fd_stage_union_epochs(spark, str(tmp_path)).count()
+
+
+def test_commit_epoch_writes_failure_lets_sibling_finish_then_raises():
+    # a failing write does not cancel its sibling: the sibling commits,
+    # and the failure surfaces only after both have finished
+    import threading
+    import time
+
+    from polars_matmul_spark.streaming.hygiene import commit_epoch_writes
+
+    failed = threading.Event()
+    finished = []
+
+    def failing_write():
+        failed.set()
+        raise RuntimeError("epoch dir write failed")
+
+    def sibling_write():
+        assert failed.wait(timeout=30)
+        time.sleep(0.2)
+        finished.append("sibling")
+
+    with pytest.raises(RuntimeError, match="epoch dir write failed"):
+        commit_epoch_writes(failing_write, sibling_write)
+    assert finished == ["sibling"]
