@@ -8,7 +8,9 @@ to idiomatic Spark:
   the reference requires a materialized ``pl.Series`` and rejects
   expressions with TypeError (python/polars_matmul/__init__.py:109-114).
   Here it ships to executors as a SparkContext broadcast — the
-  distributed analog of the reference's broadcast-by-closure.
+  distributed analog of the reference's broadcast-by-closure — made
+  once per distinct matrix (:func:`_broadcast`), so repeated calls
+  against one corpus, in any entry form, share it.
 - Arrow is the only batch format between Spark and the NumPy kernels:
   one decoder (:func:`arrow_list_to_matrix`, the analog of the
   reference's zero-copy matrix extraction, src/matmul.rs:21-95), one
@@ -16,14 +18,18 @@ to idiomatic Spark:
   :func:`matmul_batch`) that runs the BLAS kernel (the Spark analog of
   the reference's GIL-released Rust/faer call, src/lib.rs:45,
   src/metrics.rs:85-93) and encodes the result as flat buffers under
-  one offsets vector, and two entry forms over them: the Column forms
-  (``topk``/``matmul``, and so ``.pmm``) are Arrow UDFs, the DataFrame
-  forms (``topk_arrow``/``matmul_arrow``) run through the shared
-  ``mapInArrow`` plumbing :func:`map_arrow_batches`.
+  one offsets vector. The Column forms (``topk``/``matmul``, and so
+  ``.pmm``) are Arrow UDFs; the DataFrame forms
+  (``topk_arrow``/``matmul_arrow``) are projections over those same
+  UDFs. Only a batch whose output could pass 2^31 list elements, which
+  an Arrow UDF cannot return, goes through the ``mapInArrow`` plumbing
+  :func:`map_arrow_batches` instead.
 - output schemas are DECLARED to Catalyst via returnType, like the
   reference's return_dtype declaration (python/polars_matmul/__init__.py:118).
 - scalar Arrow UDFs are elementwise (row-preserving), so Catalyst pushes
-  filters/projections around them — the is_elementwise=True analog.
+  filters and column pruning below them — the is_elementwise=True
+  analog: a filter on a query column after ``matmul_arrow`` runs before
+  the kernel, and a ``count()`` does not run the kernel at all.
 
 Scale note (100 TB): this path requires the corpus to fit in executor
 memory (same constraint as the reference's single-node Series). Queries
@@ -35,6 +41,7 @@ partitioned crossJoin+window exact path) or ``operators.ann`` (IVF/LSH).
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterable
 
 import numpy as np
@@ -116,6 +123,28 @@ def _active_sc():
     return spark.sparkContext
 
 
+def _broadcast(sc, M: np.ndarray):
+    """``sc.broadcast(M)``, reused while the same matrix comes back: the
+    SparkContext keeps the broadcast of the LAST matrix it was given,
+    keyed by dtype, shape and the SHA-256 of the contiguous bytes. Calls
+    and entry forms against one corpus share one broadcast (one driver
+    temp file, one loaded copy per reused Python worker); a different
+    matrix, or one changed in place, hashes to a new key and replaces
+    the entry, so at most one corpus outlives its plans. The cost when
+    every call brings a new matrix is the hash, ~1 ms per MB. No lock:
+    two threads racing on one new matrix each broadcast it, as they
+    would without the cache, and never wait on each other.
+    """
+    M = np.ascontiguousarray(M)
+    key = (M.dtype.str, M.shape, hashlib.sha256(M).digest())
+    last = getattr(sc, "_pmm_broadcast", None)
+    if last is not None and last[0] == key:
+        return last[1]
+    bc = sc.broadcast(M)
+    sc._pmm_broadcast = (key, bc)
+    return bc
+
+
 def arrow_list_to_matrix(arr, dtype=None, expected_dim=None) -> np.ndarray:
     """Arrow list column -> dense (n, d) matrix, reading the flat child
     buffer directly — the closest Spark gets to the reference's
@@ -166,13 +195,25 @@ def arrow_list_to_matrix(arr, dtype=None, expected_dim=None) -> np.ndarray:
     return K.to_matrix(rows, dtype=dtype)
 
 
+# Spark's Arrow lists carry 32-bit offsets: one batch's output must
+# stay under this many list elements
+_LIST_LIMIT = 2**31 - 1
+
+
 def rows_to_list_array(child: pa.Array, n: int, list_type: pa.ListType) -> pa.ListArray:
     """``n`` equal-width lists over the flat ``child`` buffer (row-major,
     ``len(child) // n`` elements each): the one encoder from kernel
     output to an Arrow list column — an offsets vector, zero per-row
     Python. ``list_type`` is the exact Arrow form of the declared Spark
-    type, non-nullable fields included, so no cast runs downstream."""
+    type, non-nullable fields included, so no cast runs downstream.
+    Raises ValueError when the offsets would pass :data:`_LIST_LIMIT`
+    rather than let them wrap."""
     width = len(child) // n if n else 0
+    if n * width > _LIST_LIMIT:
+        raise ValueError(
+            f"{n} rows x {width} list elements pass Spark's 32-bit Arrow list "
+            f"offsets ({_LIST_LIMIT}); lower spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
     offsets = pa.array(np.arange(n + 1, dtype=np.int32) * width, type=pa.int32())
     return pa.ListArray.from_arrays(offsets, child, type=list_type)
 
@@ -229,15 +270,15 @@ def map_arrow_batches(
     ``row_width`` is the number of list elements each output row
     carries: Spark only accepts 32-bit-offset lists from mapInArrow, so
     rows per emitted batch are capped to keep ``n * row_width`` under
-    2^31.
+    :data:`_LIST_LIMIT`.
     """
-    bc = _active_sc().broadcast(M)
+    bc = _broadcast(df.sparkSession.sparkContext, M)
     passthrough = [f.name for f in df.schema.fields if f.name != emb_col]
     out_schema = T.StructType(
         [f for f in df.schema.fields if f.name != emb_col] + [out_field]
     )
     names = passthrough + [out_field.name]
-    step = max(1, (2**31 - 2) // max(row_width, 1))
+    step = max(1, (_LIST_LIMIT - 1) // max(row_width, 1))
 
     def fn(batches):
         M = bc.value
@@ -265,7 +306,7 @@ def topk(col, corpus, k: int, metric: str = "cosine") -> Column:
     """
     K._canonical_metric(metric)  # validate eagerly, like the Python wrapper
     mat = corpus_to_matrix(corpus)
-    bc = _active_sc().broadcast(mat)
+    bc = _broadcast(_active_sc(), mat)
     kk = int(k)
 
     def _topk_udf(arr: pa.Array) -> pa.Array:
@@ -305,7 +346,7 @@ def matmul(col, corpus, flatten: bool = False, input_is_f32: bool = False) -> Co
     if flatten:
         return F.explode(matmul(col, corpus, input_is_f32=input_is_f32))
     mat = corpus_to_matrix(corpus)
-    bc = _active_sc().broadcast(mat)
+    bc = _broadcast(_active_sc(), mat)
     out_np = _matmul_out_dtype(input_is_f32, mat)
 
     def _matmul_udf(arr: pa.Array) -> pa.Array:
@@ -362,6 +403,29 @@ def matmul_flatten_series(
     ).select(out_col)
 
 
+def _udf_batch_fits(df: DataFrame, row_width: int) -> bool:
+    """Whether one Arrow batch of kernel output — ``row_width`` list
+    elements per row, ``spark.sql.execution.arrow.maxRecordsPerBatch``
+    rows, read at plan time — stays under :data:`_LIST_LIMIT`. An Arrow
+    UDF cannot return a batch that does not; the DataFrame forms then
+    take the row-slicing :func:`map_arrow_batches` path."""
+    batch = int(df.sparkSession.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return batch > 0 and row_width * batch < _LIST_LIMIT
+
+
+def _projected(df: DataFrame, emb_col: str, kernel, out_col: str) -> DataFrame:
+    """``df`` with ``emb_col`` replaced by ``kernel(<emb_col column>)``
+    as ``out_col``, the other columns first and in order: a plain
+    projection, so Catalyst pushes filters and column pruning below the
+    kernel."""
+
+    def col(name):
+        return F.col("`" + name.replace("`", "``") + "`")
+
+    others = [col(name) for name in df.columns if name != emb_col]
+    return df.select(*others, kernel(col(emb_col)).alias(out_col))
+
+
 def topk_arrow(
     df: DataFrame,
     emb_col: str,
@@ -370,24 +434,27 @@ def topk_arrow(
     metric: str = "cosine",
     out_col: str = "matches",
 ) -> DataFrame:
-    """Fused top-k as a ``mapInArrow`` transform — the same batch
-    function, semantics and output type as :func:`topk`, with
+    """Fused top-k over a DataFrame — :func:`topk` as a projection, with
     ``out_col`` replacing ``emb_col`` and every other column passed
-    through. The DataFrame form skips the per-row UDF projection the
-    Column form pays, so it is the engine's fast kernel path; ``topk``
-    remains the Column-level ergonomic form (and the `.pmm` namespace
-    maps to it).
+    through: same batch function, semantics and element type, and
+    filters on the other columns run before the kernel. A batch too
+    wide for one Arrow list goes through :func:`map_arrow_batches`
+    instead, with the same rows and the same schema: on both paths the
+    output column is nullable, as every Python UDF result is.
     """
     K._canonical_metric(metric)
     mat = corpus_to_matrix(corpus)
     kk = int(k)
+    width = min(kk, mat.shape[0])
+    if _udf_batch_fits(df, width):
+        return _projected(df, emb_col, lambda c: topk(c, mat, kk, metric), out_col)
     return map_arrow_batches(
         df,
         emb_col,
         mat,
         lambda Q, C: topk_batch(Q, C, kk, metric),
-        T.StructField(out_col, TOPK_TYPE, False),
-        row_width=kk,
+        T.StructField(out_col, TOPK_TYPE, True),
+        row_width=width,
     )
 
 
@@ -398,20 +465,27 @@ def matmul_arrow(
     input_is_f32: bool = False,
     out_col: str = "scores",
 ) -> DataFrame:
-    """All-pairs matmul as a ``mapInArrow`` transform — the same batch
-    function, semantics and output type as :func:`matmul`, with
-    ``out_col`` replacing ``emb_col`` and every other column passed
-    through. The (n, n_corpus) score matrix leaves each batch as ONE
-    flat Arrow values buffer plus an offsets vector.
+    """All-pairs matmul over a DataFrame — :func:`matmul` as a
+    projection, with ``out_col`` replacing ``emb_col`` and every other
+    column passed through: same batch function, semantics and output
+    type, and a filter on the other columns runs before the kernel, so
+    only the kept rows' (n, n_corpus) scores cross back from Python.
+    Each batch leaves as ONE flat Arrow values buffer plus an offsets
+    vector. A batch too wide for one Arrow list goes through
+    :func:`map_arrow_batches` instead, with the same rows and the same
+    schema: on both paths the output column is nullable, as every
+    Python UDF result is.
     """
     mat = corpus_to_matrix(corpus)
     out_np = _matmul_out_dtype(input_is_f32, mat)
+    if _udf_batch_fits(df, mat.shape[0]):
+        return _projected(df, emb_col, lambda c: matmul(c, mat, input_is_f32=input_is_f32), out_col)
     return map_arrow_batches(
         df,
         emb_col,
         mat,
         lambda Q, C: matmul_batch(Q, C, out_np),
-        T.StructField(out_col, _matmul_type(out_np), False),
+        T.StructField(out_col, _matmul_type(out_np), True),
         dtype=out_np,
         row_width=mat.shape[0],
     )

@@ -180,7 +180,8 @@ def topk_select(scores: np.ndarray, k: int, higher: bool) -> tuple[np.ndarray, n
     if k <= 0 or n_q == 0:
         return (np.empty((n_q, 0), dtype=np.int64), np.empty((n_q, 0), dtype=scores.dtype))
     s = scores if higher else -scores
-    s = np.nan_to_num(s, nan=-np.inf)  # NaN never wins, never panics
+    if not np.isfinite(s).all():
+        s = np.nan_to_num(s, nan=-np.inf)  # NaN never wins, never panics
     if k < n_c:
         part = np.argpartition(s, n_c - k, axis=1)[:, n_c - k:]
     else:

@@ -18,10 +18,11 @@ README example runs verbatim modulo the Spark spelling::
     df.withColumn("matches", F.col("embedding").pmm.topk(corpus, k=5))
 
 The namespace is a thin delegate to :mod:`polars_matmul_spark.functions`
-— Arrow UDFs over the same per-batch functions as ``topk_arrow`` /
-``matmul_arrow``, so the same semantics (null vector -> zeros, data NaN
-propagates), the same broadcast-corpus contract (TypeError on a
-Column/DataFrame corpus), and the same declared return types.
+— the same Arrow UDFs that ``topk_arrow`` / ``matmul_arrow`` project,
+so the same semantics (null vector -> zeros, data NaN propagates), the
+same broadcast-corpus contract (TypeError on a Column/DataFrame corpus,
+one broadcast per distinct corpus shared with every other entry form),
+and the same declared return types.
 """
 
 from __future__ import annotations

@@ -214,6 +214,40 @@ class TestNumpyEquivalence:
         assert np.array_equal(S, expected)
         assert not S[2].any() and not S[:, 4].any()
 
+    @staticmethod
+    def _topk_select_nan_to_num(scores, k, higher):
+        # the selection with its unconditional NaN/inf mapping copy:
+        # the reference the finite-input shortcut must match bit for bit
+        n_q, n_c = scores.shape
+        k = min(k, n_c)
+        s = np.nan_to_num(scores if higher else -scores, nan=-np.inf)
+        part = np.argpartition(s, n_c - k, axis=1)[:, n_c - k:]
+        part_scores = np.take_along_axis(s, part, axis=1)
+        order = np.argsort(-part_scores, axis=1, kind="stable")
+        idx = np.take_along_axis(part, order, axis=1)
+        return idx, np.take_along_axis(scores, idx, axis=1)
+
+    @pytest.mark.parametrize("metric", ["dot", "euclidean"])
+    @pytest.mark.parametrize("case", ["finite", "nan", "inf", "all_nan"])
+    def test_topk_select_bit_equal_to_nan_to_num_formula(self, metric, case):
+        rng = np.random.default_rng(13)
+        S = K.similarity_matrix(
+            rng.standard_normal((6, 8)).astype(np.float32),
+            rng.standard_normal((40, 8)).astype(np.float32),
+            metric,
+        )
+        if case == "nan":
+            S[1, [3, 17, 30]] = np.nan
+        elif case == "inf":
+            S[2, 5], S[2, 9], S[4, 0] = np.inf, -np.inf, np.inf
+        elif case == "all_nan":
+            S[3, :] = np.nan
+        higher = K.higher_is_better(metric)
+        idx, sc = K.topk_select(S, 5, higher)
+        want_idx, want_sc = self._topk_select_nan_to_num(S, 5, higher)
+        assert np.array_equal(idx, want_idx)
+        assert np.array_equal(sc, want_sc, equal_nan=True)
+
     def test_matmul_vs_npdot(self):
         np.random.seed(42)
         Q = np.random.randn(10, 32)

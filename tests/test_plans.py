@@ -7,6 +7,7 @@ and JVM-only (no Python worker) plans for the text/dedup family.
 """
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from polars_matmul_spark.plans.inspect import count_shuffles, explain_str, uses_python_worker
@@ -52,6 +53,24 @@ def test_filter_pushed_below_kernel_udf(spark, sf_dir):
     )
     plan = explain_str(df)
     assert "LessThan(vec_id,10)" in plan, "filter not pushed below the kernel UDF"
+
+
+@pytest.mark.parametrize("form", ["matmul_arrow", "topk_arrow"])
+def test_filter_pushed_below_dataframe_kernel_form(spark, sf_dir, form):
+    # the DataFrame kernel forms are projections over the Arrow UDFs:
+    # a filter on a passed-through column runs before the kernel, pushed
+    # into the scan under the Python node
+    from polars_matmul_spark.functions import matmul_arrow, topk_arrow
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    corpus = np.eye(4, 64, dtype=np.float32)
+    if form == "matmul_arrow":
+        df = matmul_arrow(emb, "embedding", corpus, input_is_f32=True)
+    else:
+        df = topk_arrow(emb, "embedding", corpus, k=2)
+    plan = explain_str(df.filter(F.col("vec_id").isin(1, 2, 3)), "simple")
+    below = plan.split("ArrowEvalPython", 1)[-1]
+    assert "Filter vec_id" in below and "PushedFilters: [In(vec_id" in below, plan
 
 
 def test_blocked_topk_map_stage_is_arrow(spark):

@@ -3,9 +3,11 @@ the reference's test suite (tests/test_polars_matmul.py, 6 classes) to
 Spark: semantics per metric, explode/unnest composition, k-clamp,
 join-back, NumPy oracle, error surface, f32 support, and composition
 with filter/select/sort/limit/group-by under the lazy optimizer. The
-Column forms (Arrow UDFs) and the ``mapInArrow`` DataFrame forms share
-one decoder and one per-batch function per operator; ``TestArrowPaths``
-and ``TestNullRule`` pin that they agree.
+Column forms are Arrow UDFs and the DataFrame forms projections over
+them (``mapInArrow`` only for batches too wide for one Arrow list); they
+share one decoder and one per-batch function per operator, and
+``TestArrowPaths`` and ``TestNullRule`` pin that they agree.
+``TestBroadcastReuse`` pins one shared broadcast for calls against one corpus.
 """
 
 import numpy as np
@@ -16,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
 
 from polars_matmul_spark.functions import matmul, matmul_flatten, topk, topk_exploded
+from polars_matmul_spark.functions import similarity as S
 
 pytestmark = pytest.mark.usefixtures("spark")
 
@@ -246,8 +249,9 @@ class TestFloat32:
 
 
 class TestArrowPaths:
-    """mapInArrow kernel forms must equal the Column (Arrow UDF) forms
-    exactly (same batch function, same promotion, same declared schema)
+    """The DataFrame kernel forms must equal the Column (Arrow UDF)
+    forms exactly (same batch function, same promotion, same element
+    types), on the projection path and on the ``mapInArrow`` path alike
     — they are the perf path, not a semantic variant."""
 
     @pytest.fixture(scope="class")
@@ -299,8 +303,9 @@ class TestArrowPaths:
 
         C = np.ones((3, 4), dtype=np.float32)
         empty = spark.createDataFrame([], "query_id long, embedding array<float>")
-        assert topk_arrow(empty, "embedding", C, k=2).count() == 0
-        assert matmul_arrow(empty, "embedding", C).count() == 0
+        # read the output column: a count() prunes the kernel away
+        assert topk_arrow(empty, "embedding", C, k=2).select("matches").collect() == []
+        assert matmul_arrow(empty, "embedding", C).select("scores").collect() == []
 
     def test_topk_arrow_null_vector_and_k_clamp(self, spark):
         from polars_matmul_spark.functions import topk_arrow
@@ -318,6 +323,221 @@ class TestArrowPaths:
         assert all(len(r.matches) == 3 for r in rows)
         assert rows[0].matches[0]["score"] == 1.0
         assert all(m["score"] == 0.0 for m in rows[1].matches)
+
+    @pytest.mark.parametrize("trigger", ["list_limit", "batch_conf"])
+    def test_wide_batches_take_map_path_with_same_rows(self, spark, f32_df, monkeypatch, trigger):
+        # a batch whose output could pass Spark's 32-bit list offsets
+        # cannot come back from an Arrow UDF: the forms fall back to the
+        # row-slicing mapInArrow plumbing and return the same rows
+        from polars_matmul_spark.functions import matmul_arrow, topk_arrow
+        from polars_matmul_spark.plans.inspect import explain_str
+
+        rng = np.random.default_rng(10)
+        C = rng.standard_normal((5, 16)).astype(np.float32)
+
+        def build():
+            return [
+                topk_arrow(f32_df, "embedding", C, k=3, out_col="m"),
+                matmul_arrow(f32_df, "embedding", C, input_is_f32=True, out_col="m"),
+            ]
+
+        def matches(df):
+            # (index, score) per match in query_id order; a matmul row's
+            # index is the position
+            rows = [r.m for r in sorted(df.collect())]
+            return np.array(
+                [[(j, m) if isinstance(m, float) else tuple(m) for j, m in enumerate(r)] for r in rows]
+            )
+
+        projected = build()
+        assert all("ArrowEvalPython" in explain_str(df, "simple") for df in projected)
+        conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(conf)
+        try:
+            if trigger == "list_limit":
+                # 7 list elements per emitted batch: 2 top-k rows, 1 matmul row
+                monkeypatch.setattr(S, "_LIST_LIMIT", 8)
+            else:
+                spark.conf.set(conf, "0")
+            mapped = build()
+            for a, b in zip(projected, mapped):
+                assert "MapInArrow" in explain_str(b, "simple")
+                # one schema whichever path a call takes
+                assert a.schema == b.schema and a.schema["m"].nullable
+                a, b = matches(a), matches(b)
+                assert np.array_equal(a[..., 0], b[..., 0])
+                # sliced rows may take another f32 GEMM path (~1 ulp apart)
+                np.testing.assert_allclose(a[..., 1], b[..., 1], rtol=1e-5, atol=1e-6)
+        finally:
+            spark.conf.set(conf, old)
+
+    def test_encoder_refuses_offsets_past_the_list_limit(self, monkeypatch):
+        # a batch wider than Spark's 32-bit list offsets fails loudly
+        # instead of wrapping its offsets
+        import pyarrow as pa
+
+        monkeypatch.setattr(S, "_LIST_LIMIT", 8)
+        list_type = pa.list_(pa.int64())
+        assert S.rows_to_list_array(pa.array(range(8)), 4, list_type).to_pylist()[3] == [6, 7]
+        with pytest.raises(ValueError, match="32-bit Arrow list offsets"):
+            S.rows_to_list_array(pa.array(range(9)), 3, list_type)
+
+
+class _Handle:
+    """A broadcast handle that a weak reference can watch."""
+
+
+class _FakeContext:
+    """Stands in for a SparkContext: counts the broadcasts it makes,
+    and calls ``wait`` inside each one if given."""
+
+    def __init__(self, wait=None):
+        self.made, self.wait = 0, wait
+
+    def broadcast(self, value):
+        self.made += 1
+        if self.wait is not None:
+            self.wait()
+        return _Handle()
+
+
+class TestBroadcastReuse:
+    """Calls against one corpus share one broadcast per SparkContext,
+    in every entry form; a matrix changed in place gets a new one, and
+    only the last matrix's broadcast is held."""
+
+    @pytest.fixture()
+    def ids(self, monkeypatch):
+        made = []
+        real = S._broadcast
+
+        def spy(sc, M):
+            bc = real(sc, M)
+            made.append(bc)
+            return bc
+
+        monkeypatch.setattr(S, "_broadcast", spy)
+        return made
+
+    @pytest.fixture(scope="class")
+    def qdf(self, spark):
+        rng = np.random.default_rng(20)
+        return spark.createDataFrame(
+            [(i, rng.standard_normal(6).astype(np.float32).tolist()) for i in range(5)],
+            "query_id long, embedding array<float>",
+        )
+
+    def test_entry_forms_share_one_broadcast(self, spark, qdf, ids, monkeypatch):
+        from polars_matmul_spark.functions import matmul_arrow, topk_arrow
+
+        sc = spark.sparkContext
+        made = []
+        real_broadcast = sc.broadcast
+        monkeypatch.setattr(sc, "broadcast", lambda v: made.append(v) or real_broadcast(v))
+        C = np.random.default_rng(21).standard_normal((12, 6)).astype(np.float32)
+        emb = F.col("embedding")
+        outs = [
+            qdf.select(topk(emb, C, k=3)),
+            qdf.select(emb.pmm.topk(C.copy(), k=3)),
+            qdf.select(matmul(emb, C.copy(), input_is_f32=True)),
+            topk_arrow(qdf, "embedding", list(C), k=3),
+            matmul_arrow(qdf, "embedding", C.copy(), input_is_f32=True),
+        ]
+        for out in outs:
+            assert len(out.collect()) == 5
+        assert len(ids) == 5 and all(bc is ids[0] for bc in ids)
+        assert len(made) == 1
+
+    def test_in_place_write_gets_new_broadcast_and_scores(self, spark, ids):
+        from polars_matmul_spark.functions import topk_arrow
+
+        df = spark.createDataFrame([(0, [1.0, 0.0, 0.0])], "query_id long, embedding array<double>")
+        C = np.abs(np.random.default_rng(22).standard_normal((4, 3))) + 1.0
+
+        def best():
+            m = topk_arrow(df, "embedding", C, k=1, metric="dot").collect()[0].matches[0]
+            return m["index"], m["score"]
+
+        assert best() == (int(np.argmax(C[:, 0])), float(C[:, 0].max()))
+        C[:] = 0.0
+        C[2, 0] = 5.0
+        assert best() == (2, 5.0)
+        assert len(ids) == 2 and ids[0] is not ids[1]
+
+    def test_only_the_last_matrix_is_held(self, spark):
+        import gc
+        import weakref
+
+        sc = _FakeContext()
+        first, second = (np.full((512, 512), v) for v in (1.0, 2.0))  # 2 MB each
+        held = weakref.ref(S._broadcast(sc, first))
+        assert S._broadcast(sc, first.copy()) is held()
+        last = S._broadcast(sc, second)
+        gc.collect()
+        # the first corpus's broadcast is no longer referenced by the cache
+        assert held() is None and sc._pmm_broadcast[1] is last
+        assert S._broadcast(sc, second.copy()) is last and sc.made == 2
+        # same bytes under another dtype or shape is a new matrix
+        S._broadcast(sc, second.view(np.int64))
+        S._broadcast(sc, second.reshape(256, 1024))
+        assert sc.made == 4
+        # a new context starts empty
+        fresh = _FakeContext()
+        assert S._broadcast(fresh, second) is not last and fresh.made == 1
+        assert isinstance(spark.sparkContext.__dict__.get("_pmm_broadcast", ()), tuple)
+
+    def test_distinct_matrices_broadcast_concurrently(self):
+        # the cache adds no lock around sc.broadcast: two threads with
+        # different corpora are inside their broadcasts at the same time
+        import threading
+
+        both_inside = threading.Barrier(2, timeout=10)
+        sc = _FakeContext(wait=both_inside.wait)
+        errors = []
+
+        def call(v):
+            try:
+                S._broadcast(sc, np.full((3, 3), v))
+            except threading.BrokenBarrierError as e:
+                errors.append(e)
+
+        threads = [threading.Thread(target=call, args=(v,)) for v in (1.0, 2.0)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+        assert not errors and sc.made == 2
+
+    def test_reused_worker_keeps_its_loaded_copy(self, spark):
+        import pyarrow as pa
+
+        C = np.random.default_rng(23).standard_normal((50, 4))
+
+        def run():
+            bc = S._broadcast(spark.sparkContext, C.copy())
+
+            def probe(batches):
+                import os
+
+                for _ in batches:
+                    pass
+                yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "copy": [id(bc.value)]})
+
+            return spark.range(1, numPartitions=1).mapInArrow(probe, "pid long, copy long").collect()[0]
+
+        # idle workers are taken in turn, so single-task jobs come back
+        # to a worker once they have cycled through the idle pool (which
+        # earlier, wider jobs may have grown); that worker must still
+        # hold the copy it loaded before
+        copies = {}
+        for _ in range(200):
+            r = run()
+            if r.pid in copies:
+                assert r.copy == copies[r.pid]
+                break
+            copies[r.pid] = r.copy
+        else:
+            pytest.fail(f"no worker came back in 200 jobs: {len(copies)} workers")
 
 
 class TestNullRule:
