@@ -21,8 +21,12 @@ Semantics preserved exactly (cited against the reference):
 - top-k scores are ALWAYS emitted as f64, even on the f32 path
   [src/matmul.rs:446-447]
 - k > n_corpus silently clamped [src/matmul.rs:443, 463]
-- top-k selection is O(n) partition then sort-within-k; NaN never
-  panics (argpartition/argsort are NaN-tolerant) [src/topk.rs:6-75]
+- top-k selection is O(n) and NaN never wins or panics
+  [src/topk.rs:6-75]: a bound from 16k strided group maxima leaves
+  about k candidates per row to sort, with ties by index ascending;
+  a call it cannot prune (constant or heavily tied rows, or a corpus
+  of fewer than 32·k rows) takes a full-row argpartition, ties
+  arbitrary there as in the reference's quickselect
 - null elements inside a vector -> 0.0 [src/matmul.rs:192, 224, 251, 282]
 - empty corpus -> error containing "Empty" [src/matmul.rs:134, 169]
 - dimension mismatch -> "Dimension mismatch: left has {d1} dimensional
@@ -167,13 +171,61 @@ def similarity_matrix(Q: np.ndarray, C: np.ndarray, metric: str = "cosine") -> n
     return np.sqrt(sq, out=sq)
 
 
-def topk_select(scores: np.ndarray, k: int, higher: bool) -> tuple[np.ndarray, np.ndarray]:
-    """Per-row top-k (indices, scores), sorted best-first.
+# groups per k in the bounded select: enough that the k best scores of
+# a row almost always sit in k distinct groups, so the bound lands at
+# about the row's k-th best score
+GROUPS_PER_K = 16
 
-    O(n) argpartition then sort within the k survivors — the quickselect
-    analog [src/topk.rs:6-75]; matches the reference's own NumPy oracle
-    (examples/benchmark_topk.py:26-33). Ties arbitrary; NaN-safe. k is
-    clamped to n_corpus [src/matmul.rs:443].
+
+def _select_partition(s: np.ndarray, k: int) -> np.ndarray:
+    """Top-k indices of every row of ``s`` (no NaN), best first: one
+    O(n) argpartition, then a stable sort of the k survivors; the order
+    among exactly tied scores is arbitrary (index ascending when k =
+    n_corpus)."""
+    n_c = s.shape[1]
+    if k < n_c:
+        part = np.argpartition(s, n_c - k, axis=1)[:, n_c - k:]
+    else:
+        part = np.broadcast_to(np.arange(n_c), s.shape).copy()
+    order = np.argsort(-np.take_along_axis(s, part, axis=1), axis=1, kind="stable")
+    return np.take_along_axis(part, order, axis=1)
+
+
+def _select_bounded(s: np.ndarray, k: int, m: int) -> np.ndarray:
+    """Top-k indices of every row of ``s`` (no NaN, n_c >= 2m) by
+    (score desc, index asc), sorting only the scores at or above a
+    lower bound on the row's k-th best. When those are not few (more
+    than m per row on average), ``_select_partition`` takes the call."""
+    n_q, n_c = s.shape
+    w = n_c // m
+    group_max = s[:, : w * m].reshape(n_q, w, m).max(axis=1)
+    bound = np.partition(group_max, m - k, axis=1)[:, m - k]
+    cand = s >= bound[:, None]
+    if np.count_nonzero(cand) > n_q * m:  # constant or heavily tied rows
+        return _select_partition(s, k)
+    rows, cols = np.divmod(np.flatnonzero(cand), n_c)
+    order = np.lexsort((-s[rows, cols], rows))  # stable: row, score desc, index asc
+    counts = np.bincount(rows, minlength=n_q)
+    return cols[order][(np.cumsum(counts) - counts)[:, None] + np.arange(k)]
+
+
+def topk_select(scores: np.ndarray, k: int, higher: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row top-k (indices, scores), best first. k is clamped to
+    n_corpus [src/matmul.rs:443].
+
+    Bounded select, the analog of the reference's quickselect
+    [src/topk.rs:6-75] with a threshold prune: the row's columns split
+    into m = 16k disjoint strided groups (column j in group j mod m);
+    the k-th largest group max t is a lower bound on the row's k-th
+    best score, since k groups each hold a score >= t. Only the scores
+    >= t (about k per row on untied data) are sorted, and exact ties
+    among them come out by index ascending. When they are not few (more
+    than m per row on average: constant or heavily tied rows), the call
+    takes a full-row argpartition instead (``_select_partition``, tie
+    order arbitrary); so does every call with n_corpus < 2m.
+
+    NaN never wins and never raises: non-finite scores are ranked
+    through ``np.nan_to_num(nan=-inf)``, so NaN ranks below -inf.
     """
     n_q, n_c = scores.shape
     k = min(k, n_c)
@@ -182,15 +234,9 @@ def topk_select(scores: np.ndarray, k: int, higher: bool) -> tuple[np.ndarray, n
     s = scores if higher else -scores
     if not np.isfinite(s).all():
         s = np.nan_to_num(s, nan=-np.inf)  # NaN never wins, never panics
-    if k < n_c:
-        part = np.argpartition(s, n_c - k, axis=1)[:, n_c - k:]
-    else:
-        part = np.broadcast_to(np.arange(n_c), (n_q, n_c)).copy()
-    part_scores = np.take_along_axis(s, part, axis=1)
-    order = np.argsort(-part_scores, axis=1, kind="stable")
-    idx = np.take_along_axis(part, order, axis=1)
-    out_scores = np.take_along_axis(scores, idx, axis=1)
-    return idx, out_scores
+    m = GROUPS_PER_K * k
+    idx = _select_partition(s, k) if n_c < 2 * m else _select_bounded(s, k, m)
+    return idx, np.take_along_axis(scores, idx, axis=1)
 
 
 def topk(Q: np.ndarray, C: np.ndarray, k: int, metric: str = "cosine") -> tuple[np.ndarray, np.ndarray]:

@@ -33,6 +33,62 @@ def _default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return "48g" if half_mb >= cap_mb else f"{half_mb}m"
 
 
+# OpenBLAS's DYNAMIC_ARCH fallback for an x86-64 model it does not
+# recognise: SSE3 kernels only
+_GENERIC_CORES = frozenset({"Prescott"})
+# strongest first: an OpenBLAS core and the /proc/cpuinfo flags its
+# kernels need
+_CORE_FLAGS = (
+    ("SkylakeX", frozenset({"avx512f", "avx512cd", "avx512bw", "avx512dq", "avx512vl"})),
+    ("Haswell", frozenset({"avx2", "fma"})),
+)
+
+
+def _pick_openblas_coretype(corename: str | None, cpu_flags: frozenset, env) -> str | None:
+    """The OpenBLAS core the Python workers should run, or None to leave
+    them on the one OpenBLAS picks itself: a stronger core only when
+    the loaded OpenBLAS fell back to a generic one (``corename``), the
+    CPU flags support it, and ``env`` holds no ``OPENBLAS_CORETYPE``."""
+    if "OPENBLAS_CORETYPE" in env or corename not in _GENERIC_CORES:
+        return None
+    return next((core for core, need in _CORE_FLAGS if need <= cpu_flags), None)
+
+
+def openblas_corename(maps: str = "/proc/self/maps") -> str | None:
+    """The core the OpenBLAS that numpy loaded runs, as it reports it;
+    None when no OpenBLAS is mapped or none reports its core."""
+    import ctypes
+
+    import numpy  # noqa: F401  (maps numpy's BLAS into this process)
+
+    try:
+        with open(maps) as f:
+            libs = sorted({line.split()[-1] for line in f if "openblas" in line.rsplit("/", 1)[-1]})
+    except OSError:
+        return None
+    for path in libs:
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for name in ("openblas_get_corename64_", "openblas_get_corename"):
+            fn = getattr(lib, name, None)
+            if fn is not None:
+                fn.argtypes, fn.restype = [], ctypes.c_char_p
+                return fn().decode()
+    return None
+
+
+def _cpu_flags(cpuinfo: str = "/proc/cpuinfo") -> frozenset:
+    """The first CPU's flags; empty where ``cpuinfo`` is unreadable."""
+    try:
+        with open(cpuinfo) as f:
+            line = next((line for line in f if line.startswith("flags")), "")
+    except OSError:
+        return frozenset()
+    return frozenset(line.partition(":")[2].split())
+
+
 def get_spark(app_name: str = "polars_matmul_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -75,6 +131,13 @@ def get_spark(app_name: str = "polars_matmul_spark", shuffle_partitions: int | N
         .config("spark.executorEnv.OMP_NUM_THREADS", _WORKER_BLAS)
         .config("spark.executorEnv.MKL_NUM_THREADS", _WORKER_BLAS)
     )
+    # numpy's bundled OpenBLAS may not know the host CPU and fall back
+    # to its SSE3 kernels (an AVX-512 Xeon ran the task GEMM at ~16
+    # GFLOP/s, 7x under SkylakeX). local[N] runs the workers on this
+    # host, so its flags decide; the driver's own numpy is left as it is.
+    core = _pick_openblas_coretype(openblas_corename(), _cpu_flags(), os.environ)
+    if core is not None:
+        builder = builder.config("spark.executorEnv.OPENBLAS_CORETYPE", core)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

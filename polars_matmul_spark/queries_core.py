@@ -1229,13 +1229,13 @@ def _sketch_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _topk_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FLAGSHIP pandas-UDF kernel path (N3) under the oracle gate.
+    """The FLAGSHIP Arrow-UDF kernel path (N3) under the oracle gate.
 
     NumPy's BLAS dot and DuckDB's sequential fold differ in the last
     ulps, so scores are rounded to 6 decimals on both sides; ranks use
-    the kernel's own ordering (ties broken by corpus index ascending,
-    matching np.argpartition+stable sort in kernels.topk_select —
-    replicated in the oracle by (score, corpus_id) ordering).
+    the kernel's own ordering (score desc, exact ties by corpus index
+    ascending wherever kernels.topk_select's bound prunes the call —
+    replicated in the oracle by (score DESC, corpus_id ASC) ordering).
     """
     from polars_matmul_spark.functions import topk_exploded
     from polars_matmul_spark.kernels import to_matrix

@@ -183,6 +183,29 @@ class TestTopkFused:
             K.topk(np.ones((1, 2)), np.ones((1, 3)), k=1)
 
 
+def _partition_select(scores, k, higher):
+    # the select before the bound, with its unconditional NaN/inf
+    # mapping copy: a full-row argpartition, then a stable sort of the k
+    # survivors (order among exact ties arbitrary); the reference the
+    # fallback and the finite-input shortcut must match bit for bit
+    n_c = scores.shape[1]
+    s = np.nan_to_num(scores if higher else -scores, nan=-np.inf)
+    part = np.argpartition(s, n_c - k, axis=1)[:, n_c - k:]
+    order = np.argsort(-np.take_along_axis(s, part, axis=1), axis=1, kind="stable")
+    idx = np.take_along_axis(part, order, axis=1)
+    return idx, np.take_along_axis(scores, idx, axis=1)
+
+
+def _stable_sort_select(scores, k, higher):
+    # the selection as a full stable sort after the same mapping: the
+    # reference the bounded path must match bit for bit (ties by index
+    # ascending; NaN scores tie with each other)
+    k = min(k, scores.shape[1])
+    s = np.nan_to_num(scores if higher else -scores, nan=-np.inf)
+    idx = np.argsort(-s, axis=1, kind="stable")[:, :k]
+    return idx, np.take_along_axis(scores, idx, axis=1)
+
+
 class TestNumpyEquivalence:
     # randomized oracle, seed 42 [tests/test_polars_matmul.py:261-296]
     def test_cosine_vs_handrolled(self):
@@ -214,19 +237,6 @@ class TestNumpyEquivalence:
         assert np.array_equal(S, expected)
         assert not S[2].any() and not S[:, 4].any()
 
-    @staticmethod
-    def _topk_select_nan_to_num(scores, k, higher):
-        # the selection with its unconditional NaN/inf mapping copy:
-        # the reference the finite-input shortcut must match bit for bit
-        n_q, n_c = scores.shape
-        k = min(k, n_c)
-        s = np.nan_to_num(scores if higher else -scores, nan=-np.inf)
-        part = np.argpartition(s, n_c - k, axis=1)[:, n_c - k:]
-        part_scores = np.take_along_axis(s, part, axis=1)
-        order = np.argsort(-part_scores, axis=1, kind="stable")
-        idx = np.take_along_axis(part, order, axis=1)
-        return idx, np.take_along_axis(scores, idx, axis=1)
-
     @pytest.mark.parametrize("metric", ["dot", "euclidean"])
     @pytest.mark.parametrize("case", ["finite", "nan", "inf", "all_nan"])
     def test_topk_select_bit_equal_to_nan_to_num_formula(self, metric, case):
@@ -244,7 +254,7 @@ class TestNumpyEquivalence:
             S[3, :] = np.nan
         higher = K.higher_is_better(metric)
         idx, sc = K.topk_select(S, 5, higher)
-        want_idx, want_sc = self._topk_select_nan_to_num(S, 5, higher)
+        want_idx, want_sc = _partition_select(S, 5, higher)
         assert np.array_equal(idx, want_idx)
         assert np.array_equal(sc, want_sc, equal_nan=True)
 
@@ -253,6 +263,145 @@ class TestNumpyEquivalence:
         Q = np.random.randn(10, 32)
         C = np.random.randn(20, 32)
         np.testing.assert_allclose(K.similarity_matrix(Q, C, "dot"), Q @ C.T, rtol=1e-5)
+
+
+@pytest.fixture
+def fallback_rows(monkeypatch):
+    """Records how many rows each ``_select_partition`` call gets."""
+    calls = []
+    real = K._select_partition
+
+    def spy(s, k):
+        calls.append(s.shape[0])
+        return real(s, k)
+
+    monkeypatch.setattr(K, "_select_partition", spy)
+    return calls
+
+
+class TestBoundedSelect:
+    # k = 10 -> m = 160 groups; n_c >= 320 takes the bounded path, which
+    # falls back when a call has more than 160 candidates per row
+    K_ = 10
+
+    @pytest.mark.parametrize("higher", [True, False])
+    @pytest.mark.parametrize("dtype", [np.float32, np.float64])
+    def test_bit_equal_to_argpartition_formula(self, dtype, higher, fallback_rows):
+        rng = np.random.default_rng(17)
+        S = K.similarity_matrix(
+            rng.standard_normal((64, 32)).astype(dtype),
+            rng.standard_normal((5000, 32)).astype(dtype),
+            "cosine",
+        )
+        idx, sc = K.topk_select(S, self.K_, higher)
+        want_idx, want_sc = _partition_select(S, self.K_, higher)
+        assert fallback_rows == []  # every row took the bound
+        assert idx.dtype == want_idx.dtype
+        assert np.array_equal(idx, want_idx)
+        assert sc.dtype == dtype and np.array_equal(sc, want_sc)
+
+    @pytest.mark.parametrize("n_c", [2000, 5000])
+    def test_exact_ties_come_out_index_ascending(self, n_c, fallback_rows):
+        rng = np.random.default_rng(3)
+        S = rng.standard_normal((3, n_c))
+        S[0, [n_c - 1, 5, 17, n_c // 2]] = 9.0  # a 4-way tie for first
+        S[1, [n_c - 2, 3, 11]] = 7.0  # ties straddling k = 2
+        S[2] = np.round(S[2], 1)  # ties everywhere
+        idx, sc = K.topk_select(S, 2, higher=True)
+        assert idx[0].tolist() == [5, 17]
+        assert idx[1].tolist() == [3, 11]
+        assert np.array_equal(idx, _stable_sort_select(S, 2, True)[0])
+        idx, _ = K.topk_select(-S, 3, higher=False)
+        assert idx[0].tolist() == [5, 17, n_c // 2]
+        assert np.array_equal(idx, _stable_sort_select(S, 3, True)[0])
+        assert fallback_rows == []
+
+    def test_constant_rows_take_the_fallback(self, fallback_rows):
+        S = np.random.default_rng(4).standard_normal((50, 3000))
+        S[[3, 7]] = 0.0
+        idx, sc = K.topk_select(S, self.K_, higher=True)
+        assert fallback_rows == []  # two rows of candidates are still few
+        assert idx[3].tolist() == idx[7].tolist() == list(range(self.K_))
+        S[:10] = 0.25
+        idx, sc = K.topk_select(S, self.K_, higher=True)
+        assert fallback_rows == [50]  # the whole call, with the old tie order
+        want_idx, want_sc = _partition_select(S, self.K_, True)
+        assert np.array_equal(idx, want_idx) and np.array_equal(sc, want_sc)
+        assert (sc[:10] == 0.25).all()
+        S[:] = -1.0
+        idx, _ = K.topk_select(S, self.K_, higher=False)
+        assert fallback_rows == [50, 50]
+        assert np.array_equal(idx, _partition_select(S, self.K_, False)[0])
+
+    def test_best_scores_sharing_one_group(self, fallback_rows):
+        # column j sits in group j mod m: lifting all of group 0 puts
+        # its 100 scores above the bound, far more than k. One such row
+        # among eight keeps the call under m candidates per row; eight
+        # such rows do not, and the call falls back
+        k, m = 3, 48
+        S = np.random.default_rng(6).standard_normal((8, 100 * m))
+        S[1, ::m] += 10.0
+        idx, _ = K.topk_select(S, k, higher=True)
+        assert fallback_rows == []
+        assert np.array_equal(idx, _stable_sort_select(S, k, True)[0])
+        S[:, ::m] += 10.0
+        idx, _ = K.topk_select(S, k, higher=True)
+        assert fallback_rows == [8]
+        assert np.array_equal(idx, _stable_sort_select(S, k, True)[0])
+
+    @pytest.mark.parametrize("higher", [True, False])
+    def test_non_finite_scores_on_the_bound(self, higher, fallback_rows):
+        rng = np.random.default_rng(8)
+        S = rng.standard_normal((40, 3000)).astype(np.float32)
+        S[0, rng.choice(3000, 500, replace=False)] = np.nan
+        S[1, [10, 20, 30]] = np.inf
+        S[2, [11, 21]] = -np.inf
+        S[6, : 3000 - 4] = np.nan  # fewer finite scores than k
+        idx, sc = K.topk_select(S, self.K_, higher)
+        assert fallback_rows == []
+        want_idx, want_sc = _stable_sort_select(S, self.K_, higher)
+        assert np.array_equal(idx, want_idx)
+        assert np.array_equal(sc, want_sc, equal_nan=True)
+        assert sorted(idx[6, :4].tolist()) == [2996, 2997, 2998, 2999]
+        assert idx[6, 4:].tolist() == list(range(self.K_ - 4))  # NaN ties
+
+    @pytest.mark.parametrize("higher", [True, False])
+    def test_non_finite_rows_take_the_fallback(self, higher, fallback_rows):
+        rng = np.random.default_rng(9)
+        S = rng.standard_normal((8, 3000)).astype(np.float32)
+        S[0, [10, 20, 30]] = np.inf
+        S[3, :] = np.nan
+        S[4, :] = np.inf
+        S[5, :] = -np.inf
+        idx, sc = K.topk_select(S, self.K_, higher)
+        assert fallback_rows == [8]
+        want_idx, want_sc = _partition_select(S, self.K_, higher)
+        assert np.array_equal(idx, want_idx)
+        assert np.array_equal(sc, want_sc, equal_nan=True)
+        assert np.isnan(sc[3]).all()
+
+    @pytest.mark.parametrize("n_c,k", [(319, 10), (320, 10), (7, 7), (5, 9), (1, 1)])
+    def test_small_corpus_and_k_at_or_past_n_c(self, n_c, k, fallback_rows):
+        S = np.random.default_rng(n_c).standard_normal((6, n_c))
+        idx, sc = K.topk_select(S, k, higher=True)
+        kk = min(k, n_c)
+        assert idx.shape == sc.shape == (6, kk)
+        assert fallback_rows == ([] if n_c >= 2 * 16 * kk else [6])
+        assert np.array_equal(idx, _stable_sort_select(S, k, True)[0])
+        assert np.array_equal(sc, np.sort(S, axis=1)[:, ::-1][:, :kk])
+
+    def test_zero_row_at_k_equal_n_c(self, fallback_rows):
+        # a zero query under cosine is a constant row; at k = n_c every
+        # row is a full stable sort, so its ties come out index-ascending
+        S = K.similarity_matrix(
+            np.vstack([np.zeros((1, 16)), np.random.default_rng(5).standard_normal((5, 16))]),
+            np.random.default_rng(6).standard_normal((2000, 16)),
+            "cosine",
+        )
+        idx, sc = K.topk_select(S, 2000, higher=True)
+        assert fallback_rows == [6]
+        assert idx[0].tolist() == list(range(2000)) and not sc[0].any()
+        assert np.array_equal(idx, _stable_sort_select(S, 2000, True)[0])
 
 
 class TestToMatrix:

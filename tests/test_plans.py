@@ -182,6 +182,76 @@ def test_default_driver_memory_is_half_memtotal_capped(tmp_path):
     assert _default_driver_memory(str(tmp_path / "missing")) == "48g"
 
 
+
+_AVX512 = frozenset({"avx512f", "avx512cd", "avx512bw", "avx512dq", "avx512vl"})
+_AVX2 = frozenset({"avx", "avx2", "fma", "sse3"})
+
+
+@pytest.mark.parametrize(
+    "corename,flags,env,want",
+    [
+        ("Prescott", _AVX512 | _AVX2, {}, "SkylakeX"),  # generic core, AVX-512 host
+        ("Prescott", _AVX2, {}, "Haswell"),
+        ("Prescott", _AVX2 - {"fma"}, {}, None),
+        ("Prescott", _AVX2 | (_AVX512 - {"avx512vl"}), {}, "Haswell"),
+        ("SkylakeX", _AVX512 | _AVX2, {}, None),  # already specific
+        ("Haswell", _AVX512 | _AVX2, {}, None),
+        ("Prescott", _AVX512 | _AVX2, {"OPENBLAS_CORETYPE": "Prescott"}, None),  # user's wins
+        (None, _AVX512 | _AVX2, {}, None),  # no OpenBLAS / unreadable library
+        ("Prescott", frozenset(), {}, None),  # unreadable cpuinfo
+    ],
+)
+def test_worker_openblas_core_choice(corename, flags, env, want):
+    from polars_matmul_spark.plans.session import _pick_openblas_coretype
+
+    assert _pick_openblas_coretype(corename, flags, env) == want
+
+
+def test_openblas_core_readers(tmp_path):
+    from polars_matmul_spark.plans.session import _cpu_flags, openblas_corename
+
+    info = tmp_path / "cpuinfo"
+    info.write_text("processor\t: 0\nflags\t\t: fpu avx2 fma\n\nprocessor\t: 1\nflags\t\t: fpu\n")
+    assert _cpu_flags(str(info)) == frozenset({"fpu", "avx2", "fma"})
+    assert _cpu_flags(str(tmp_path / "missing")) == frozenset()
+    maps = tmp_path / "maps"
+    maps.write_text("7f00-7f01 r-xp 00000000 00:00 0 /usr/lib/libc.so.6\n")
+    assert openblas_corename(str(maps)) is None
+    assert openblas_corename(str(tmp_path / "missing")) is None
+
+
+def test_every_python_worker_runs_the_chosen_openblas_core(spark):
+    # the core OpenBLAS reports in each worker is the one get_spark
+    # chose for the workers, or the driver's own when it chose none
+    import os
+
+    import pyarrow as pa
+
+    from polars_matmul_spark.plans.session import (
+        _cpu_flags,
+        _pick_openblas_coretype,
+        openblas_corename,
+        ship_package,
+    )
+
+    ship_package(spark)
+    driver = openblas_corename()
+    want = _pick_openblas_coretype(driver, _cpu_flags(), os.environ) or driver
+
+    def probe(batches):
+        import os
+
+        from polars_matmul_spark.plans.session import openblas_corename
+
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"pid": [os.getpid()], "core": [openblas_corename()]})
+
+    n = spark.sparkContext.defaultParallelism
+    rows = spark.range(n, numPartitions=n).mapInArrow(probe, "pid long, core string").collect()
+    assert len(rows) == n
+    assert {r.core for r in rows} == {want}, rows
+
 def test_hash_split_is_narrow_and_jvm_side(spark, sf_dir):
     # the split predicate must stay a row-local filter: no Exchange, no
     # Python worker — at 100 TB this is a free column on the scan

@@ -121,6 +121,52 @@ def test_stage_union_unreadable_stage_dir_raises(spark, tmp_path, name, payload)
         _fd_stage_union_epochs(spark, str(tmp_path)).count()
 
 
+
+def test_front_door_epochs_on_a_tiny_table_match_the_oracle(spark, tmp_path):
+    # the two-epoch front door end to end on 120 synthetic documents:
+    # they hold every planted page class (doc_id % 83 in 5..8, % 97 in
+    # 1..2) on both sides of the epoch split, so the overlapped probe /
+    # WARC writes, both epochs and the one-read stage union all run
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polars_matmul_spark.queries_pipeline import _FDE_SPLIT, _fde_oracle, _front_door_epochs
+
+    n = 120
+    assert 2 + 97 < n and 8 + 83 < n and 8 + 83 >= _FDE_SPLIT
+    rng = np.random.default_rng(5)
+    words = "the a data row spark join merge sort key value query table batch window stream".split()
+    texts = [" ".join(rng.choice(words, size)) for size in rng.integers(8, 60, n)]
+    path = tmp_path / "documents.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": np.arange(n, dtype=np.int64),
+                "text": texts,
+                "lang": ["en"] * n,
+                "source": [f"src{i % 3}" for i in range(n)],
+                "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
+            }
+        ),
+        path,
+    )
+    got = _front_door_epochs(spark, str(tmp_path)).toPandas()
+    assert set(got["epoch"]) == {0, 1}
+    assert set(got["stage"]) == {"head", "quota", "hygiene", "unique", "clean", "flagged"}
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    want = con.sql(_fde_oracle()).df()
+    con.close()
+
+    def rows(df):
+        cols = sorted(df.columns)
+        return sorted((tuple(r) for r in df[cols].astype(object).itertuples(index=False)), key=repr)
+
+    assert sorted(got.columns) == sorted(want.columns)
+    assert rows(got) == rows(want)
+
 def test_commit_epoch_writes_failure_lets_sibling_finish_then_raises():
     # a failing write does not cancel its sibling: the sibling commits,
     # and the failure surfaces only after both have finished
