@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: kernel top-k (pandas-UDF + broadcast corpus path) over
+    """Flagship: kernel top-k (Arrow UDF + broadcast corpus path) over
     sf0.001 embeddings — queries vs corpus split of the table, k=5
     cosine, exploded matches joined back to corpus labels."""
     from pyspark.sql import functions as F

@@ -22,16 +22,15 @@
 - ``mllib_matmul``     BlockMatrix distributed matmul
 - ``asof`` / ``rangejoin``  temporal joins
 - ``sketches`` / ``skew``   approximate aggs, salted patterns
-- ``multimodal``       binary-column plumbing; REAL WAV/BMP/PNG
-  decoders surfaced via decoded_asset_stats; fake-decode family
-- ``jpeg``             REAL JPEG codec: baseline + progressive SOF2
-- ``gif``              REAL GIF codec: LZW, interlace, animation
-- ``tiff``             REAL baseline-TIFF codec: PackBits +
-  early-change LZW + predictor, palette/bilevel
+- ``multimodal``       binary-column plumbing; REAL WAV/BMP
+  decoders surfaced via decoded_asset_stats; fake-decode family;
+  standalone PNG codec (decode_png/encode_png, not dispatched)
+- ``gif``              standalone GIF codec: LZW, interlace, animation
+  (not dispatched)
 - ``flac``             REAL FLAC codec: Rice + fixed/LPC prediction,
   CRC + MD5 self-verified lossless audio
 - ``mediaprobe``       MP3/MP4 container-metadata probing (ffprobe
-  pass; header-bounded)
+  pass; header-bounded; WAV/FLAC/BMP/PNG/JPEG/GIF/TIFF by magic)
 - ``rawbytes``         archive expansion (zip/tar/gz/bz2/xz, bomb
   guards) + encoding detection / UTF-8 transcoding
 - ``linededup``        CCNet-style line-level boilerplate removal
@@ -68,7 +67,7 @@
   precision@k, nDCG@k per query + macro averages (ordered folds,
   DuckDB-replayable)
 - image near-dup: ``multimodal.image_dhash`` (perceptual dHash over
-  really-decoded BMP/PNG/JPEG/GIF/TIFF pixels) +
+  really-decoded 24-bit BMP pixels) +
   ``neardup_images_dhash`` (banded Hamming join, pigeonhole-exact
   below the band count)
 - ``linkgraph``        crawl link-graph priors: href extraction,

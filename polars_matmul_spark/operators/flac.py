@@ -7,8 +7,9 @@ entropy coding, fixed/LPC linear prediction, stereo decorrelation and
 two CRCs — all expressible with stdlib + NumPy. This closes the
 compressed-audio branch of the multimodal layer's env-blocked stub
 (the reference repo has no audio surface at all; this module is part
-of the training-pipeline extension layer, used by ``decode_asset`` /
-``decoded_asset_stats`` in ``operators/multimodal.py``).
+of the training-pipeline extension layer, used by
+``decoded_asset_stats`` and ``audio_rms_windows`` in
+``operators/multimodal.py``).
 
 Decoder scope: STREAMINFO + skipped metadata blocks, fixed and
 variable blocking, all four channel assignments (independent,

@@ -1,16 +1,14 @@
 """GIF decode/encode in pure stdlib + NumPy — no codec library.
 
-GIF (87a/89a) is, like PNG and baseline JPEG, decodable from first
-principles: the only "codec" work is the variable-width LZW entropy
-code (GIF's one compression scheme), palette lookup, interlace row
-reordering, and frame compositing — all expressible with stdlib +
-NumPy. This closes the GIF branch of the multimodal layer's
-env-blocked stub (the reference repo has no image surface at all —
-its SURVEY §2.3 scope is two similarity pyfunctions; this module is
-part of the training-pipeline extension layer, used by
-``decode_asset`` / ``decoded_asset_stats`` / ``_decode_image_rgb``
-and the REAL frame sampler ``frame_sample_gif`` in
-``operators/multimodal.py``).
+GIF (87a/89a) is, like PNG, decodable from first principles: the only
+"codec" work is the variable-width LZW entropy code (GIF's one
+compression scheme), palette lookup, interlace row reordering, and
+frame compositing — all expressible with stdlib + NumPy. The reference
+repo has no image surface at all (its SURVEY §2.3 scope is two
+similarity pyfunctions). This is a standalone library codec: no
+operator dispatches to it, so GIF payloads are ``opaque`` in
+``multimodal.decoded_asset_stats`` and undecodable for the dHash
+family.
 
 Scope: GIF87a and GIF89a, global/local color tables, interlace,
 transparency, disposal methods 0-3, animation (multi-image with
@@ -27,10 +25,8 @@ lossless, so round-trip tests assert bit-exact pixels; the decoder
 additionally has an in-the-wild fixture no code in this repo produced
 (the canonical 1x1 transparent GIF, a public constant).
 
-Scale note: decoding happens inside mapInPandas batches per asset —
-embarrassingly parallel, no shuffle; per-asset work is O(pixels) with
-the only Python-level loop being the LZW symbol walk (bounded by the
-compressed byte count), exactly the JPEG module's shape.
+Cost note: per-asset work is O(pixels), with the only Python-level
+loop being the LZW symbol walk (bounded by the compressed byte count).
 """
 
 from __future__ import annotations

@@ -1,8 +1,7 @@
 """Container metadata probing for MP3 and MP4 — the ffprobe shape.
 
-Full MP3/MP4 SAMPLE decode needs codec libraries this container does
-not ship (the one remaining env-blocked hole, see
-``multimodal.decode_asset``). But the container METADATA — duration,
+Full MP3/MP4 SAMPLE decode needs codec libraries the package does
+not depend on. But the container METADATA — duration,
 bitrate, sample rate, channel mode, codec fourcc, dimensions, track
 layout — is plain header parsing, fully in first-principles reach,
 and it is what a 100 TB curation pipeline actually runs over raw
@@ -317,9 +316,10 @@ def probe_media_table(
     """ffprobe-over-a-table: sniff every payload's container by magic
     bytes and emit one metadata row per asset — MP3 and MP4 through
     the deep probes above (duration, bitrate, codec, dimensions,
-    track counts), the really-decodable containers (WAV/FLAC/PNG/BMP/
-    JPEG/GIF) tagged by magic without decoding (probing must stay
-    header-bounded at 100 TB), anything else ``container='opaque'``.
+    track counts), WAV/FLAC/BMP and the PNG/JPEG/GIF/TIFF image
+    containers tagged by magic without decoding (probing must stay
+    header-bounded at 100 TB; of these only WAV/FLAC/BMP decode in
+    ``multimodal``), anything else ``container='opaque'``.
 
     -> (asset_id, container, codec, duration_s, bitrate_kbps,
     sample_rate, channels, width, height, n_frames, n_tracks).

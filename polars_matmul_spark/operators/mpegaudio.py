@@ -1,10 +1,9 @@
 """MPEG-1 Audio Layer I frame-payload decode — from first principles.
 
-Closes most of the one remaining capability stub
-(``multimodal.decode_asset``'s MPEG branch): Layer I sample data is
-now REALLY decoded, not just header-probed. Everything Layer I needs
-is formula-derived from ISO 11172-3 — uniform 4-bit bit-allocation
-codes (nb = alloc + 1), 6-bit scalefactor indices into the geometric
+Layer I sample data is REALLY decoded, not just header-probed.
+Everything Layer I needs is formula-derived from ISO 11172-3 —
+uniform 4-bit bit-allocation codes (nb = alloc + 1), 6-bit
+scalefactor indices into the geometric
 table sf(i) = 2 * 2^(-i/3), and the mid-rise requantization
 
     s'' = (2^nb / (2^nb - 1)) * (c / 2^(nb-1) - 1 + 2^(-nb)) * sf

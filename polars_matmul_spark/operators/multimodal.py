@@ -6,34 +6,23 @@ the training-pipeline extension layer: treat media as opaque ``binary``
 payloads with typed metadata, and run decode / feature-extract /
 resize / frame-sample as Arrow-batched Python stages.
 
-Containers decodable without a codec library decode for REAL in pure
-NumPy: RIFF/WAVE PCM (``decode_wav`` — stdlib-``wave``-validated),
-uncompressed 24-bit BMP (``decode_bmp``), full PNG (``decode_png`` —
-DEFLATE is in stdlib ``zlib``; zlib inflate + the five scanline
-filters + palette / bit-depth handling, ``encode_png`` as the writing
-sink), JPEG — baseline AND progressive frames (``operators.jpeg`` —
-Huffman entropy decode + dequant + IDCT + chroma upsample, T.81
-annex-G progressive scan accumulation, all first-principles NumPy),
-GIF incl. animation (``operators.gif`` — variable-width LZW,
-interlace, disposal compositing; ``frame_sample_gif`` is the REAL
-video-shaped frame sampler), baseline TIFF (``operators.tiff`` — IFD
-walk, strips, PackBits + TIFF-LZW with predictor 2, palette/bilevel/
-16-bit), and FLAC (``operators.flac`` — Rice
-coding + fixed/LPC prediction + stereo decorrelation, CRC-8/16 and
+Three containers decode for REAL in pure NumPy: RIFF/WAVE PCM
+(``decode_wav`` — stdlib-``wave``-validated), uncompressed 24-bit BMP
+(``decode_bmp``), and FLAC (``operators.flac`` — Rice coding +
+fixed/LPC prediction + stereo decorrelation, CRC-8/16 and
 STREAMINFO-MD5 self-verified: losslessness makes the decode its own
-cryptographic oracle). All seven are surfaced through
-``decoded_asset_stats``, ``audio_rms_windows(real_decode=True)`` and
-``resize_bmp_real``. MPEG-1 Layer I frame payloads also decode for
-real (``operators.mpegaudio`` — allocation/scalefactor/sample bit
-walk + the formula-exact mid-rise requantizer, driver-gated through
-``mpeg_layer1_decode``). What remains out of reach offline: Layer
-II/III payloads and PCM synthesis (both need ISO data tables —
-3-B.2a-d allocation, Huffman, the 3-B.3 window — that cannot be
-re-derived from formulas) and MP4 sample decode (needs ffmpeg-class
-codecs). For those ``decode_asset`` remains a clearly-marked stub
-raising ``NotImplementedError``, with ``mediaprobe`` providing the
-header-probe pass a real triage runs first. Everything Spark-side is real and tested
-either way: the binary schema, the mapInPandas batch shapes,
+cryptographic oracle). They are surfaced through
+``decoded_asset_stats``, ``audio_rms_windows(real_decode=True)``,
+``resize_bmp_real`` and the dHash family; every other payload is
+``opaque`` (or, for the image operators, undecodable). MPEG-1 Layer I
+frame payloads also decode for real (``operators.mpegaudio`` —
+allocation/scalefactor/sample bit walk + the formula-exact mid-rise
+requantizer, driver-gated through ``mpeg_layer1_decode``), and
+``mediaprobe`` provides the header-probe pass a real triage runs
+first. ``decode_png`` / ``encode_png`` remain as a standalone library
+codec that no operator dispatches to (like ``operators.gif``), so PNG
+payloads are ``opaque`` here too. Everything Spark-side is real and
+tested either way: the binary schema, the mapInPandas batch shapes,
 deterministic fake decoders (payload bytes ARE the samples —
 documents are pure ASCII so byte == codepoint, which makes the fakes
 DuckDB-oracle-checkable).
@@ -60,14 +49,12 @@ __all__ = [
     "frame_sample",
     "resize_fake",
     "audio_rms_windows",
-    "decode_asset",
     "decode_wav",
     "decode_bmp",
     "decode_png",
     "encode_png",
     "decoded_asset_stats",
     "resize_bmp_real",
-    "frame_sample_gif",
     "triage_assets",
     "image_dhash",
     "image_dhash_variance",
@@ -236,74 +223,14 @@ def frame_sample(
     )
 
 
-def frame_sample_gif(
-    df: DataFrame,
-    every: int = 2,
-    id_col: str = "asset_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL frame sampling over animated-GIF payloads: decode the
-    animation (:func:`gif.decode_gif` — composited frames, so each
-    sampled frame is what a viewer shows at that point), keep every
-    ``every``-th frame, and emit its timing + per-channel means —
-    the video-pipeline shape (decode container → sample frames →
-    per-frame features) with a real decoder. Non-GIF or malformed
-    payloads emit nothing (route them through :func:`frame_sample`,
-    the container-agnostic byte-block sampler).
-
-    -> (asset_id, frame_no, delay_cs, height, width, mean_r, mean_g,
-    mean_b). mapInPandas, no shuffle; per-asset work is O(pixels).
-    """
-    if every < 1:
-        raise ValueError(f"every must be >= 1, got {every}")
-    schema = (
-        f"{id_col} long, frame_no long, delay_cs long, height long, "
-        "width long, mean_r double, mean_g double, mean_b double"
-    )
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from polars_matmul_spark.operators.gif import decode_gif
-
-        for pdf in batches:
-            rows = []
-            for aid, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload)
-                if p[:6] not in (b"GIF87a", b"GIF89a"):
-                    continue
-                try:
-                    frames, delays = decode_gif(p)
-                except ValueError:
-                    continue
-                for fno in range(0, len(frames), every):
-                    f = frames[fno]
-                    rows.append(
-                        {
-                            id_col: aid, "frame_no": fno,
-                            "delay_cs": delays[fno],
-                            "height": f.shape[0], "width": f.shape[1],
-                            "mean_r": float(f[..., 0].mean()),
-                            "mean_g": float(f[..., 1].mean()),
-                            "mean_b": float(f[..., 2].mean()),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "frame_no", "delay_cs", "height", "width",
-                    "mean_r", "mean_g", "mean_b",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(sample, schema)
-
-
 def resize_fake(
     df: DataFrame, out_w: int = 4, out_h: int = 4, id_col: str = "asset_id"
 ) -> DataFrame:
     """Fake resize: nearest-neighbor stride subsample of the fake-decoded
     image down to (out_h, out_w), returned as a binary payload again.
-    Real interpolation needs PIL (see ``decode_asset``); the Spark-side
-    contract — binary in, smaller binary out, schema stable — is real.
+    Real interpolation needs PIL (``resize_bmp_real`` is the real
+    nearest-neighbor path for 24-bit BMP); the Spark-side contract —
+    binary in, smaller binary out, schema stable — is real.
     """
     schema = f"{id_col} long, resized binary"
 
@@ -447,6 +374,9 @@ def decode_bmp(payload: bytes) -> np.ndarray:
     return rows[..., ::-1].copy()  # BGR -> RGB
 
 
+# PNG codec: a standalone decode/encode pair. No operator in this module
+# dispatches to it; ``decoded_asset_stats`` and the dHash family decode
+# 24-bit BMP only.
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 #: channels per PNG color type (0 gray, 2 RGB, 3 palette, 4 gray+A, 6 RGBA)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -663,75 +593,15 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
     )
 
 
-def decode_asset(payload: bytes, kind: str):
-    """REAL codec decode. Containers decodable with the stdlib + NumPy
-    are decoded for real — RIFF/WAVE PCM (:func:`decode_wav`),
-    uncompressed 24-bit BMP (:func:`decode_bmp`), PNG
-    (:func:`decode_png` — DEFLATE is in stdlib ``zlib``), baseline
-    JPEG (:func:`jpeg.decode_jpeg` — Huffman + IDCT in pure NumPy),
-    JPEG — both baseline and progressive (SOF2) frames — GIF incl.
-    animation (:func:`gif.decode_gif` — LZW in pure Python; returns
-    ``(frames, delays_cs)``), and FLAC (:func:`flac.decode_flac_mono`
-    — Rice + fixed/LPC prediction, CRC + MD5 self-verified; returns
-    the WAV-shaped ``(rate, mono)``), all sniffed by magic bytes.
-    Formats needing codecs outside first-principles reach (MP3/MP4)
-    still need a library this container doesn't ship; for those the
-    deterministic fake decoders remain the documented stand-ins."""
-    if len(payload) >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return decode_wav(payload)
-    if len(payload) >= 2 and payload[:2] == b"BM":
-        return decode_bmp(payload)
-    if payload[:8] == _PNG_SIG:
-        return decode_png(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        from polars_matmul_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from polars_matmul_spark.operators.gif import decode_gif
-
-        return decode_gif(payload)
-    if payload[:4] == b"fLaC":
-        from polars_matmul_spark.operators.flac import decode_flac_mono
-
-        return decode_flac_mono(payload)
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        from polars_matmul_spark.operators.tiff import decode_tiff
-
-        return decode_tiff(payload)
-    try:
-        if kind == "image":
-            import PIL.Image  # noqa: F401
-        elif kind == "audio":
-            import librosa  # noqa: F401
-        else:
-            import av  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            f"real {kind} decode of this container requires a codec "
-            "library not present in this environment; WAV-PCM, 24-bit "
-            "BMP, PNG, JPEG (baseline + progressive), GIF and FLAC "
-            "decode for real (decode_wav/decode_bmp/decode_png/"
-            "jpeg.decode_jpeg/gif.decode_gif/flac.decode_flac), other "
-            "formats use the "
-            "deterministic fake decoders (pixel_stats / "
-            "byte_histogram_features / resize_fake)"
-        ) from exc
-    raise NotImplementedError("codec present but real decode not wired yet")
-
-
 def decoded_asset_stats(df: DataFrame, id_col: str = "asset_id") -> DataFrame:
     """REAL per-asset decode stats over a binary column: sniff each
     payload's container; WAV-PCM and FLAC rows emit (sample_rate,
     n_samples, duration_s, audio_rms — FLAC decoded losslessly and
-    MD5-self-verified), 24-bit-BMP and PNG rows emit (width,
-    height, mean_r, mean_g, mean_b — grayscale PNGs repeat the gray
-    mean, alpha is excluded); GIF rows emit the image stats over the
-    FIRST composited frame plus the animation timing in the audio
-    slots (n_samples = frame count, duration_s = sum of frame delays
-    — a GIF IS a timed sequence); anything else passes through as
-    container='opaque' with null stats — decodable and opaque assets
-    can share one table, exactly how a mixed crawl lands.
+    MD5-self-verified), 24-bit-BMP rows emit (width, height, mean_r,
+    mean_g, mean_b); anything else (other image containers included)
+    passes through as container='opaque' with null stats — decodable
+    and opaque assets can share one table, exactly how a mixed crawl
+    lands.
 
     mapInPandas batches; the per-row decode is header parsing + one
     vectorized NumPy pass per asset, and the operator never shuffles.
@@ -784,64 +654,6 @@ def decoded_asset_stats(df: DataFrame, id_col: str = "asset_id") -> DataFrame:
                             mean_r=float(img[..., 0].mean()),
                             mean_g=float(img[..., 1].mean()),
                             mean_b=float(img[..., 2].mean()),
-                        )
-                    elif p[:8] == _PNG_SIG or p[:3] == b"\xff\xd8\xff":
-                        is_png = p[:8] == _PNG_SIG
-                        if is_png:
-                            img = decode_png(p)
-                        else:
-                            from polars_matmul_spark.operators.jpeg import (
-                                decode_jpeg,
-                            )
-
-                            img = decode_jpeg(p)
-                        if img.ndim == 2:  # gray: repeat the mean
-                            r = g = b = float(img.mean())
-                        elif img.shape[2] == 2:  # gray+alpha: drop alpha
-                            r = g = b = float(img[..., 0].mean())
-                        else:  # RGB / RGBA: alpha excluded
-                            r, g, b = (
-                                float(img[..., i].mean()) for i in range(3)
-                            )
-                        base.update(
-                            container="png" if is_png else "jpeg",
-                            width=img.shape[1],
-                            height=img.shape[0], mean_r=r, mean_g=g, mean_b=b,
-                        )
-                    elif p[:4] in (b"II*\x00", b"MM\x00*"):
-                        from polars_matmul_spark.operators.tiff import (
-                            decode_tiff,
-                        )
-
-                        img = decode_tiff(p)
-                        if img.dtype == np.uint16:
-                            img = (img >> 8).astype(np.uint8)
-                        if img.ndim == 2:
-                            r = g = b = float(img.mean())
-                        else:  # RGB / RGBA: alpha excluded
-                            r, g, b = (
-                                float(img[..., i].mean()) for i in range(3)
-                            )
-                        base.update(
-                            container="tiff",
-                            width=img.shape[1], height=img.shape[0],
-                            mean_r=r, mean_g=g, mean_b=b,
-                        )
-                    elif p[:6] in (b"GIF87a", b"GIF89a"):
-                        from polars_matmul_spark.operators.gif import (
-                            decode_gif,
-                        )
-
-                        frames, delays = decode_gif(p)
-                        first = frames[0]
-                        base.update(
-                            container="gif",
-                            width=first.shape[1], height=first.shape[0],
-                            mean_r=float(first[..., 0].mean()),
-                            mean_g=float(first[..., 1].mean()),
-                            mean_b=float(first[..., 2].mean()),
-                            n_samples=len(frames),
-                            duration_s=sum(delays) / 100.0,
                         )
                 except ValueError:
                     pass  # malformed header: stays opaque
@@ -931,54 +743,20 @@ def audio_rms_windows(
     return df.select(id_col, "payload").mapInPandas(frames, schema)
 
 
-def _decode_image_rgb(p: bytes) -> np.ndarray | None:
-    """Sniff + decode any really-decodable image container to a
-    canonical (h, w, 3) uint8 RGB array: 24-bit BMP as-is; PNG with
-    gray replicated across channels, alpha dropped, and 16-bit
-    channels truncated to their high byte; GIF as its first
-    composited frame. None for non-image or malformed payloads."""
+def _decode_bmp_or_none(p: bytes) -> np.ndarray | None:
+    """:func:`decode_bmp`, with None for any payload it rejects (not a
+    24-bit BMP, or malformed) — the image operators' undecodable rule."""
     try:
-        if p[:2] == b"BM":
-            return decode_bmp(p)
-        if p[:8] == _PNG_SIG:
-            img = decode_png(p)
-            if img.dtype == np.uint16:
-                img = (img >> 8).astype(np.uint8)
-            if img.ndim == 2:
-                return np.repeat(img[:, :, None], 3, axis=2)
-            if img.shape[2] == 2:  # gray+alpha
-                return np.repeat(img[:, :, :1], 3, axis=2)
-            return img[:, :, :3].copy()  # RGB / RGBA minus alpha
-        if p[:3] == b"\xff\xd8\xff":
-            from polars_matmul_spark.operators.jpeg import decode_jpeg
-
-            img = decode_jpeg(p)
-            if img.ndim == 2:
-                return np.repeat(img[:, :, None], 3, axis=2)
-            return img
-        if p[:6] in (b"GIF87a", b"GIF89a"):
-            from polars_matmul_spark.operators.gif import decode_gif_image
-
-            return decode_gif_image(p)
-        if p[:4] in (b"II*\x00", b"MM\x00*"):
-            from polars_matmul_spark.operators.tiff import decode_tiff
-
-            img = decode_tiff(p)
-            if img.dtype == np.uint16:
-                img = (img >> 8).astype(np.uint8)
-            if img.ndim == 2:
-                return np.repeat(img[:, :, None], 3, axis=2)
-            return img[:, :, :3].copy()  # RGB / RGBA minus alpha
+        return decode_bmp(p)
     except ValueError:
         return None
-    return None
 
 
 def resize_bmp_real(
     df: DataFrame, out_w: int = 4, out_h: int = 4, id_col: str = "asset_id"
 ) -> DataFrame:
-    """REAL image resize for really-decodable image payloads (24-bit
-    BMP and PNG — :func:`_decode_image_rgb`): decode, nearest-neighbor
+    """REAL image resize for 24-bit BMP payloads
+    (:func:`_decode_bmp_or_none`): decode, nearest-neighbor
     sample a (out_h, out_w) RGB grid (the same np.linspace grid
     arithmetic as ``resize_fake``, so fake and real paths stay
     comparable), and return the pixels as a flat RGB byte payload plus
@@ -995,7 +773,7 @@ def resize_bmp_real(
         for pdf in batches:
             rows = []
             for aid, payload in zip(pdf[id_col], pdf["payload"]):
-                img = _decode_image_rgb(bytes(payload))
+                img = _decode_bmp_or_none(bytes(payload))
                 if img is None:
                     continue
                 h, w, _ = img.shape
@@ -1018,12 +796,11 @@ def image_dhash(
 ) -> DataFrame:
     """Perceptual difference-hash over REALLY DECODED pixels — the
     image-side analogue of the text fingerprints: two images that look
-    alike hash to nearby bit strings no matter which container or
-    (lossless) encoding they shipped in.
+    alike hash to nearby bit strings.
 
-    Recipe (the standard dHash): decode any supported container
-    (BMP/PNG/JPEG/GIF/TIFF via :func:`_decode_image_rgb` — so a PNG
-    and a BMP of the SAME pixels get the SAME hash), Rec.601 luma,
+    Recipe (the standard dHash): decode the 24-bit BMP payload
+    (:func:`_decode_bmp_or_none`; any other container is
+    undecodable), Rec.601 luma,
     nearest-neighbor sample to a (hash_size, hash_size+1) grid with
     the repo's ``np.linspace`` grid arithmetic, emit one bit per
     horizontal neighbor pair (left < right), pack row-major into a
@@ -1059,7 +836,7 @@ def _dhash_row(payload: bytes, hash_size: int, with_variance: bool = True):
     ``with_variance=False`` skips the full-plane variance reduction
     (the tuple's last slot is then None) — the hash bits are computed
     identically either way."""
-    img = _decode_image_rgb(payload)
+    img = _decode_bmp_or_none(payload)
     if img is None:
         return None
     h, w, _ = img.shape
@@ -1310,7 +1087,7 @@ def triage_assets(
     an operator instead of example glue. Every payload is container-
     probed (``mediaprobe.probe_media_table`` — header-bounded), the
     really-decodable containers flow through ``decoded_asset_stats``
-    (WAV/FLAC/PNG/BMP/GIF, lossless + self-verified), MPEG-1 Layer I
+    (WAV/FLAC/BMP, lossless + self-verified), MPEG-1 Layer I
     streams additionally through ``mpegaudio.decode_layer1_table``
     (payload-bit decode: code counts + digest), and everything else
     keeps its probe row with null decode stats — one unified table, no

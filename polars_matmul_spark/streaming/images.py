@@ -15,9 +15,9 @@ Scale/semantics notes:
 - Within-batch duplicates collapse greedily by ascending id AGAINST
   SURVIVORS (the chain rule the embedding loop documents: a row drops
   only if similar to a KEPT row).
-- Undecodable payloads are not silently admitted: they land in the
-  ``rejected`` epoch sink with reason 'undecodable' (quarantine, not
-  abort — the rawbytes contract).
+- Undecodable payloads (anything but a well-formed 24-bit BMP) are
+  not silently admitted: they land in the ``rejected`` epoch sink with
+  reason 'undecodable' (quarantine, not abort — the rawbytes contract).
 - Writes use the idempotent epoch-sink pattern; a replayed batch that
   finds ITSELF in the catalog must not self-reject (self-id guard, as
   in the text/embedding loops).

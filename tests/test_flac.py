@@ -255,12 +255,6 @@ class TestIntegration:
         sine = (16384 * np.sin(2 * np.pi * 440 * t / rate)).astype(np.int64)
         return encode_flac(sine, rate)
 
-    def test_decode_asset_dispatch(self):
-        from polars_matmul_spark.operators.multimodal import decode_asset
-
-        rate, mono = decode_asset(self._sine_flac(), "audio")
-        assert rate == 8000 and mono.shape == (8000,)
-
     def test_decoded_asset_stats_flac_row(self, spark):
         from polars_matmul_spark.operators.multimodal import (
             decoded_asset_stats,

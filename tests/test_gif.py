@@ -1,9 +1,7 @@
 """GIF codec: LZW round trips, interlace, animation compositing,
 transparency, disposal methods (hand-built streams), an in-the-wild
-fixture no code in this repo produced, the error surface, and the
-Spark integration (decoded_asset_stats / frame_sample_gif /
-decode_asset dispatch). GIF is lossless, so every round-trip assert
-is bit-exact."""
+fixture no code in this repo produced, and the error surface. GIF is
+lossless, so every round-trip assert is bit-exact."""
 
 import base64
 import struct
@@ -11,7 +9,6 @@ import struct
 import numpy as np
 import pytest
 
-from polars_matmul_spark.operators import multimodal as M
 from polars_matmul_spark.operators.gif import (
     _interlace_rows,
     _lzw_decode,
@@ -266,54 +263,6 @@ class TestFixtureAndErrors:
             encode_gif([])
         with pytest.raises(ValueError, match="one entry per frame"):
             encode_gif(np.zeros((2, 2, 3), np.uint8), delays_cs=[1, 2])
-
-
-# ---------------------------------------------------------------------------
-# multimodal integration
-
-
-class TestIntegration:
-    def test_decode_asset_dispatch(self):
-        img = _random_image(6, 6, 4)
-        frames, delays = M.decode_asset(encode_gif(img), "image")
-        assert (frames[0] == img).all() and delays == [0]
-
-    def test_decode_image_rgb_first_frame(self):
-        img = _random_image(5, 9, 3)
-        got = M._decode_image_rgb(encode_gif([img, _random_image(5, 9, 3)]))
-        assert (got == img).all()
-
-    def test_decoded_asset_stats_gif_row(self, spark):
-        f1 = np.full((4, 8, 3), (10, 20, 30), np.uint8)
-        f2 = np.full((4, 8, 3), (50, 60, 70), np.uint8)
-        payloads = [
-            (1, encode_gif([f1, f2], delays_cs=[25, 75])),
-            (2, b"not a container at all"),
-        ]
-        df = spark.createDataFrame(payloads, "asset_id long, payload binary")
-        rows = {r.asset_id: r for r in M.decoded_asset_stats(df).collect()}
-        gif = rows[1]
-        assert gif.container == "gif"
-        assert (gif.width, gif.height) == (8, 4)
-        assert (gif.mean_r, gif.mean_g, gif.mean_b) == (10.0, 20.0, 30.0)
-        assert gif.n_samples == 2  # frame count
-        assert gif.duration_s == pytest.approx(1.0)  # 25 + 75 cs
-        assert rows[2].container == "opaque"
-
-    def test_frame_sample_gif(self, spark):
-        frames = [np.full((3, 3, 3), (i, 0, 0), np.uint8) for i in range(5)]
-        payloads = [
-            (1, encode_gif(frames, delays_cs=[1, 2, 3, 4, 5])),
-            (2, b"opaque payload"),
-        ]
-        df = spark.createDataFrame(payloads, "asset_id long, payload binary")
-        got = M.frame_sample_gif(df, every=2).orderBy("frame_no").collect()
-        assert [r.frame_no for r in got] == [0, 2, 4]
-        assert [r.delay_cs for r in got] == [1, 3, 5]
-        assert [r.mean_r for r in got] == [0.0, 2.0, 4.0]
-        assert {(r.height, r.width) for r in got} == {(3, 3)}
-        with pytest.raises(ValueError, match="every"):
-            M.frame_sample_gif(df, every=0)
 
 
 @pytest.mark.slow

@@ -1,6 +1,6 @@
 """Perceptual image near-dup (multimodal.image_dhash /
-neardup_images_dhash): dHash invariants (cross-container equality,
-robustness to mild noise, separation of unrelated images), the banded
+neardup_images_dhash): dHash invariants (robustness to mild noise,
+separation of unrelated images), the banded
 Hamming join's recall guarantee, and plan/partitioning gates."""
 
 import struct
@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from polars_matmul_spark.operators.multimodal import (
-    encode_png,
     image_dhash,
     image_dhash_variance,
     image_neardup_new_vs_index,
@@ -55,19 +54,6 @@ def _ham(a, b):
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
-def test_dhash_cross_container_equal(spark):
-    img = _gradient()
-    df = _assets(
-        spark,
-        [(1, bytearray(encode_png(img))), (2, bytearray(_bmp_bytes(img)))],
-    )
-    out = {r.asset_id: r for r in image_dhash(df).collect()}
-    # the SAME pixels through PNG and BMP must hash identically —
-    # decode normalizes the container away
-    assert out[1].dhash == out[2].dhash
-    assert (out[1].src_w, out[1].src_h) == (32, 24)
-
-
 def test_dhash_noise_close_unrelated_far(spark):
     img = _gradient()
     near = _noised(img)
@@ -76,9 +62,9 @@ def test_dhash_noise_close_unrelated_far(spark):
     df = _assets(
         spark,
         [
-            (1, bytearray(encode_png(img))),
-            (2, bytearray(encode_png(near))),
-            (3, bytearray(encode_png(far))),
+            (1, bytearray(_bmp_bytes(img))),
+            (2, bytearray(_bmp_bytes(near))),
+            (3, bytearray(_bmp_bytes(far))),
         ],
     )
     out = {r.asset_id: r.dhash for r in image_dhash(df).collect()}
@@ -89,10 +75,10 @@ def test_dhash_noise_close_unrelated_far(spark):
 def test_neardup_pairs_found_and_separated(spark):
     img = _gradient()
     rows = [
-        (1, bytearray(encode_png(img))),
+        (1, bytearray(_bmp_bytes(img))),
         (2, bytearray(_bmp_bytes(img))),          # exact dup, distance 0
-        (3, bytearray(encode_png(_noised(img)))),  # near dup
-        (4, bytearray(encode_png((255 - np.flip(_gradient(seed=77), axis=1)).astype(np.uint8)))),
+        (3, bytearray(_bmp_bytes(_noised(img)))),  # near dup
+        (4, bytearray(_bmp_bytes((255 - np.flip(_gradient(seed=77), axis=1)).astype(np.uint8)))),
         (5, bytearray(b"not an image at all")),    # skipped silently
     ]
     out = {
@@ -115,10 +101,10 @@ def test_flat_images_collide_unfiltered_but_are_prefiltered(spark):
     while keeping a genuine near-dup pair in the same corpus."""
     img = _gradient()
     rows = [
-        (1, bytearray(encode_png(img))),
-        (2, bytearray(encode_png(_noised(img)))),      # real near dup
-        (3, bytearray(encode_png(_flat(value=200)))),  # solid gray
-        (4, bytearray(encode_png(_flat(value=10)))),   # solid near-black
+        (1, bytearray(_bmp_bytes(img))),
+        (2, bytearray(_bmp_bytes(_noised(img)))),      # real near dup
+        (3, bytearray(_bmp_bytes(_flat(value=200)))),  # solid gray
+        (4, bytearray(_bmp_bytes(_flat(value=10)))),   # solid near-black
     ]
     df = _assets(spark, rows)
     raw = {
@@ -137,8 +123,8 @@ def test_dhash_variance_values(spark):
     df = _assets(
         spark,
         [
-            (1, bytearray(encode_png(_flat()))),
-            (2, bytearray(encode_png(_gradient()))),
+            (1, bytearray(_bmp_bytes(_flat()))),
+            (2, bytearray(_bmp_bytes(_gradient()))),
         ],
     )
     out = {r.asset_id: r for r in image_dhash_variance(df).collect()}
@@ -156,7 +142,7 @@ def test_banded_join_recall_exact_under_bands(spark):
     # the <bands guarantee on raw hashes is checked arithmetically
     img = _gradient()
     df = _assets(
-        spark, [(1, bytearray(encode_png(img))), (2, bytearray(_bmp_bytes(img)))]
+        spark, [(1, bytearray(_bmp_bytes(img))), (2, bytearray(_bmp_bytes(img)))]
     )
     pairs = neardup_images_dhash(df, max_distance=0, bands=4).collect()
     assert [(p.id_a, p.id_b, p.distance) for p in pairs] == [(1, 2, 0)]
@@ -164,7 +150,7 @@ def test_banded_join_recall_exact_under_bands(spark):
 
 def test_dhash_partitioning_invariance(spark):
     img = _gradient()
-    rows = [(i, bytearray(encode_png(_noised(img, seed=i)))) for i in range(6)]
+    rows = [(i, bytearray(_bmp_bytes(_noised(img, seed=i)))) for i in range(6)]
     a = sorted(tuple(r) for r in image_dhash(_assets(spark, rows).repartition(5)).collect())
     b = sorted(tuple(r) for r in image_dhash(_assets(spark, rows).coalesce(1)).collect())
     assert a == b
@@ -182,12 +168,12 @@ def test_incremental_equals_full_restricted(spark):
     img = _gradient()
     other = _gradient(seed=55)
     hist_rows = [
-        (1, bytearray(encode_png(img))),
-        (2, bytearray(encode_png(other))),
+        (1, bytearray(_bmp_bytes(img))),
+        (2, bytearray(_bmp_bytes(other))),
     ]
     new_rows = [
-        (10, bytearray(encode_png(_noised(img)))),   # near-dup of 1
-        (11, bytearray(encode_png((255 - np.flip(_gradient(seed=77), axis=1)).astype(np.uint8)))),
+        (10, bytearray(_bmp_bytes(_noised(img)))),   # near-dup of 1
+        (11, bytearray(_bmp_bytes((255 - np.flip(_gradient(seed=77), axis=1)).astype(np.uint8)))),
     ]
     index = image_dhash(_assets(spark, hist_rows)).select("asset_id", "dhash")
     inc = {
@@ -210,12 +196,12 @@ def test_incremental_equals_full_restricted(spark):
 
 def test_incremental_index_broadcast_plan(spark):
     img = _gradient()
-    index = image_dhash(_assets(spark, [(1, bytearray(encode_png(img)))])).select(
+    index = image_dhash(_assets(spark, [(1, bytearray(_bmp_bytes(img)))])).select(
         "asset_id", "dhash"
     )
     plan = (
         image_neardup_new_vs_index(
-            _assets(spark, [(2, bytearray(encode_png(img)))]), index
+            _assets(spark, [(2, bytearray(_bmp_bytes(img)))]), index
         )
         ._jdf.queryExecution().executedPlan().toString()
     )
@@ -229,7 +215,7 @@ def test_band_join_plan_no_pixels(spark):
     # the banded join must carry only slim long columns — payload
     # never appears past the hash stage
     img = _gradient()
-    df = _assets(spark, [(1, bytearray(encode_png(img)))])
+    df = _assets(spark, [(1, bytearray(_bmp_bytes(img)))])
     out = neardup_images_dhash(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the candidate join operates on slim long columns; the payload

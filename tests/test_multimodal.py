@@ -99,11 +99,6 @@ def test_resize_fake_truncated_payload_clips_not_crashes(spark):
     assert bytes(got[0].resized) == bytes([0, 15, 16, 31])
 
 
-def test_decode_asset_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        M.decode_asset(b"\x00" * 16, "image")
-
-
 class TestAudioRmsWindows:
     WIN, HOP = 64, 32
 
@@ -328,31 +323,6 @@ class TestRealDecoders:
         got = decode_bmp(self._bmp_bytes(img))
         assert np.array_equal(got, img)
 
-    def test_decode_asset_dispatch(self):
-        import numpy as np
-        import pytest as _pytest
-
-        from polars_matmul_spark.operators.multimodal import decode_asset
-
-        wav, _ = self._wav_bytes(n=64)
-        rate, mono = decode_asset(wav, "audio")
-        assert rate == 8000 and len(mono) == 64
-        img = np.zeros((2, 2, 3), dtype=np.uint8)
-        assert decode_asset(self._bmp_bytes(img), "image").shape == (2, 2, 3)
-        # PNG and baseline JPEG now decode for real — full coverage in
-        # tests/test_png.py / test_jpeg.py; MP3/MP4 remain the
-        # env-blocked stub path
-        from polars_matmul_spark.operators.jpeg import encode_jpeg
-        from polars_matmul_spark.operators.multimodal import encode_png
-
-        assert decode_asset(encode_png(img), "image").shape == (2, 2, 3)
-        assert decode_asset(encode_jpeg(img), "image").shape == (2, 2, 3)
-        with _pytest.raises(NotImplementedError, match="codec"):
-            decode_asset(b"ID3\x04\x00....mp3ish", "audio")
-        # a corrupt stream in a KNOWN container is ValueError, not stub
-        with _pytest.raises(ValueError, match="truncated"):
-            decode_asset(b"\xff\xd8\xff\xe0....JFIF", "image")
-
     def test_spark_decoded_stats(self, spark):
         import numpy as np
 
@@ -439,25 +409,68 @@ class TestRealDecoders:
 
         from polars_matmul_spark.operators.multimodal import resize_bmp_real
 
-        from polars_matmul_spark.operators.multimodal import encode_png
-
         rng = np.random.default_rng(11)
         img = rng.integers(0, 256, size=(8, 6, 3), dtype=np.uint8)
         rows = [
             (1, bytearray(self._bmp_bytes(img))),
             (2, bytearray(b"not an image at all")),
-            (3, bytearray(encode_png(img))),  # same pixels, PNG container
         ]
         df = spark.createDataFrame(rows, "asset_id long, payload binary")
         out = {r.asset_id: r for r in resize_bmp_real(df, out_w=3, out_h=4).collect()}
-        assert set(out) == {1, 3}  # undecodable emits nothing
-        assert bytes(out[3].resized) == bytes(out[1].resized)
+        assert set(out) == {1}  # undecodable emits nothing
         r = out[1]
         assert (r.src_w, r.src_h) == (6, 8)
         got = np.frombuffer(bytes(r.resized), dtype=np.uint8).reshape(4, 3, 3)
         ys = np.linspace(0, 7, 4).astype(np.int64)
         xs = np.linspace(0, 5, 3).astype(np.int64)
         assert np.array_equal(got, img[ys[:, None], xs[None, :]])
+
+
+#: one well-formed 1x1 image per container the package probes but does
+#: not decode: PNG (RGB), baseline JPEG (gray), GIF89a, little-endian TIFF
+UNDECODED_IMAGES = {
+    "png": bytes.fromhex(
+        "89504e470d0a1a0a0000000d4948445200000001000000010802000000907753"
+        "de0000000c49444154789c6338a11105000306014b0d6034f10000000049454e"
+        "44ae426082"
+    ),
+    "jpeg": bytes.fromhex(
+        "ffd8ffdb00430001010101010101010101010101010101010101010101010101"
+        "0101010101010101010101010101010101010101010101010101010101010101"
+        "01010101010101ffc0000b080001000101011100ffc400260001000000000000"
+        "00000000000000000000100100000000000000000000000000000000ffda0008"
+        "010100003f003fffd9"
+    ),
+    "gif": bytes.fromhex(
+        "47494638396101000100f00000c8285a0000002c00000000010001000002024401003b"
+    ),
+    "tiff": bytes.fromhex(
+        "49492a0008000000090000010400010000000100000001010400010000000100"
+        "000002010300030000007a000000030103000100000001000000060103000100"
+        "0000020000001101040001000000800000001501030001000000030000001601"
+        "0400010000004000000017010400010000000300000000000000080008000800"
+        "c8285a"
+    ),
+}
+
+
+@pytest.mark.parametrize("container", sorted(UNDECODED_IMAGES))
+def test_probed_image_containers_are_opaque_and_undecodable(spark, container):
+    """Only 24-bit BMP decodes: a well-formed PNG/JPEG/GIF/TIFF is
+    ``opaque`` with null stats, hashes to no dHash row, and still gets
+    its container label from the header probe."""
+    from polars_matmul_spark.operators.mediaprobe import probe_media_table
+
+    df = spark.createDataFrame(
+        [(1, bytearray(UNDECODED_IMAGES[container]))],
+        "asset_id long, payload binary",
+    )
+    (stats,) = M.decoded_asset_stats(df).collect()
+    assert stats.container == "opaque"
+    nulls = {k: v for k, v in stats.asDict().items() if k not in ("asset_id", "container")}
+    assert set(nulls.values()) == {None}
+    assert M.image_dhash(df).collect() == []
+    assert [r.container for r in probe_media_table(df).collect()] == [container]
 
 
 def test_decoded_stats_row_survives_non_ascii_text(spark, tmp_path):

@@ -194,26 +194,3 @@ def test_adam7_and_illegal_combos_rejected():
         # IDAT inflates to the wrong number of scanline bytes
         decode_png(_png(2, 2, 8, 0, b"\x00\x00"))
 
-
-def test_decoded_asset_stats_includes_png(spark):
-    from polars_matmul_spark.operators.multimodal import decoded_asset_stats
-
-    rgb = np.zeros((3, 5, 3), dtype=np.uint8)
-    rgb[..., 0], rgb[..., 1], rgb[..., 2] = 11, 22, 33
-    gray = np.full((2, 2), 9, dtype=np.uint8)
-    rgba = np.dstack([rgb, np.full((3, 5), 128, np.uint8)])
-    rows = [
-        (1, bytearray(encode_png(rgb, 2))),
-        (2, bytearray(encode_png(gray))),
-        (3, bytearray(encode_png(rgba, 4))),
-        (4, bytearray(SIG + b"\x00" * 40)),  # corrupt PNG -> opaque
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    out = {r.asset_id: r for r in decoded_asset_stats(df).collect()}
-    assert out[1].container == "png" and (out[1].width, out[1].height) == (5, 3)
-    assert (out[1].mean_r, out[1].mean_g, out[1].mean_b) == (11.0, 22.0, 33.0)
-    assert out[2].container == "png"
-    assert out[2].mean_r == out[2].mean_g == out[2].mean_b == 9.0
-    assert out[3].container == "png"  # alpha excluded from the means
-    assert (out[3].mean_r, out[3].mean_g, out[3].mean_b) == (11.0, 22.0, 33.0)
-    assert out[4].container == "opaque" and out[4].width is None

@@ -10,8 +10,10 @@ import glob
 import numpy as np
 import pytest
 
+from test_image_neardup import _bmp_bytes
+from test_multimodal import UNDECODED_IMAGES
+
 from polars_matmul_spark.operators.multimodal import (
-    encode_png,
     image_dhash,
     neardup_images_dhash,
 )
@@ -58,17 +60,18 @@ def dirs(tmp_path):
 def test_cross_epoch_rejection_and_quarantine(spark, dirs):
     img = _gradient()
     # epoch 0: original + one unrelated
-    _assets(spark, [(1, bytearray(encode_png(img))), (2, bytearray(encode_png(_far())))]).coalesce(1).write.parquet(f"{dirs['in']}/f0")
+    _assets(spark, [(1, bytearray(_bmp_bytes(img))), (2, bytearray(_bmp_bytes(_far())))]).coalesce(1).write.parquet(f"{dirs['in']}/f0")
     # epoch 1: near-dup of 1 (must reject), a structurally different
     # novel image (accept — a same-generator different-seed image would
-    # itself be a near-dup, which is the operator working), and garbage
-    # bytes (quarantine)
+    # itself be a near-dup, which is the operator working), garbage
+    # bytes and a well-formed GIF (both quarantine: only BMP decodes)
     _assets(
         spark,
         [
-            (10, bytearray(encode_png(_noised(img)))),
-            (11, bytearray(encode_png(_checker()))),
+            (10, bytearray(_bmp_bytes(_noised(img)))),
+            (11, bytearray(_bmp_bytes(_checker()))),
             (12, bytearray(b"not an image")),
+            (13, bytearray(UNDECODED_IMAGES["gif"])),
         ],
     ).coalesce(1).write.parquet(f"{dirs['in']}/f1")
 
@@ -78,14 +81,14 @@ def test_cross_epoch_rejection_and_quarantine(spark, dirs):
     cat_ids = sorted(r.asset_id for r in spark.read.parquet(dirs["cat"]).collect())
     assert cat_ids == [1, 2, 11]
     rej = {r.rejected_id: r.reason for r in spark.read.parquet(dirs["rej"]).collect()}
-    assert rej == {10: "near_duplicate", 12: "undecodable"}
+    assert rej == {10: "near_duplicate", 12: "undecodable", 13: "undecodable"}
 
 
 def test_within_batch_collapse_keeps_lowest_id(spark, dirs):
     img = _gradient()
     batch = _assets(
         spark,
-        [(5, bytearray(encode_png(img))), (6, bytearray(encode_png(_noised(img))))],
+        [(5, bytearray(_bmp_bytes(img))), (6, bytearray(_bmp_bytes(_noised(img))))],
     )
     ingest_images_batch(spark, batch, 0, dirs["cat"], dirs["rej"])
     cat_ids = [r.asset_id for r in spark.read.parquet(dirs["cat"]).collect()]
@@ -98,10 +101,10 @@ def test_within_batch_collapse_keeps_lowest_id(spark, dirs):
 def test_stream_equals_batch_pipeline(spark, dirs):
     img = _gradient()
     rows = [
-        (1, bytearray(encode_png(img))),
-        (2, bytearray(encode_png(_far()))),
-        (3, bytearray(encode_png(_noised(img)))),
-        (4, bytearray(encode_png(_far(seed=123)))),
+        (1, bytearray(_bmp_bytes(img))),
+        (2, bytearray(_bmp_bytes(_far()))),
+        (3, bytearray(_bmp_bytes(_noised(img)))),
+        (4, bytearray(_bmp_bytes(_far(seed=123)))),
     ]
     for i in range(4):  # one row per epoch — worst-case interleaving
         _assets(spark, rows[i : i + 1]).coalesce(1).write.parquet(f"{dirs['in']}/f{i}")
@@ -128,7 +131,7 @@ def test_stream_equals_batch_pipeline(spark, dirs):
 
 def test_epoch_replay_idempotent(spark, dirs):
     img = _gradient()
-    batch = _assets(spark, [(1, bytearray(encode_png(img)))])
+    batch = _assets(spark, [(1, bytearray(_bmp_bytes(img)))])
     ingest_images_batch(spark, batch, 0, dirs["cat"], dirs["rej"])
     # replay the SAME epoch: the row must not self-reject
     ingest_images_batch(spark, batch, 0, dirs["cat"], dirs["rej"])
@@ -141,11 +144,11 @@ def test_epoch_replay_idempotent(spark, dirs):
 def test_catalog_rows_are_hashes_not_pixels(spark, dirs):
     img = _gradient()
     ingest_images_batch(
-        spark, _assets(spark, [(1, bytearray(encode_png(img)))]), 0,
+        spark, _assets(spark, [(1, bytearray(_bmp_bytes(img)))]), 0,
         dirs["cat"], dirs["rej"],
     )
     cat = spark.read.parquet(dirs["cat"])
     assert "payload" not in cat.columns
-    expected = image_dhash(_assets(spark, [(1, bytearray(encode_png(img)))])).collect()[0]
+    expected = image_dhash(_assets(spark, [(1, bytearray(_bmp_bytes(img)))])).collect()[0]
     got = cat.collect()[0]
     assert got.dhash == expected.dhash and got.src_w == 32
