@@ -8,8 +8,13 @@ one profile.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import socket
 import sys
+import tempfile
 import zipimport
 
 from pyspark.sql import SparkSession
@@ -89,6 +94,41 @@ def _cpu_flags(cpuinfo: str = "/proc/cpuinfo") -> frozenset:
     return frozenset(line.partition(":")[2].split())
 
 
+# AF_UNIX sun_path holds 108 bytes, the last one the NUL
+_SUN_PATH_MAX = 107
+_SOCK_DIR_PREFIX = "pmm-uds-"
+# "/" + mkdtemp's name (prefix + 8 random characters), then Spark's
+# "/.<uuid4>.sock" socket name
+_SOCK_SUFFIX_LEN = 1 + len(_SOCK_DIR_PREFIX) + 8 + len("/.00000000-0000-0000-0000-000000000000.sock")
+
+
+def _make_socket_dir(bases, af_unix: bool) -> str | None:
+    """A new 0700 directory under the first of ``bases`` where it can be
+    made and its socket paths fit ``sun_path``; None (Spark's TCP
+    loopback) when none does or the platform has no ``AF_UNIX``."""
+    if not af_unix:
+        return None
+    for base in bases:
+        if len(os.path.abspath(base)) + _SOCK_SUFFIX_LEN > _SUN_PATH_MAX:
+            continue
+        try:
+            return tempfile.mkdtemp(prefix=_SOCK_DIR_PREFIX, dir=base)
+        except OSError:
+            continue
+    return None
+
+
+@functools.cache
+def python_socket_dir() -> str | None:
+    """The directory every JVM<->Python worker socket of this process
+    lives in, made once and removed at interpreter exit; None where the
+    streams stay on TCP."""
+    d = _make_socket_dir((tempfile.gettempdir(), "/tmp"), hasattr(socket, "AF_UNIX"))
+    if d is not None:
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
+
+
 def get_spark(app_name: str = "polars_matmul_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -138,6 +178,18 @@ def get_spark(app_name: str = "polars_matmul_spark", shuffle_partitions: int | N
     core = _pick_openblas_coretype(openblas_corename(), _cpu_flags(), os.environ)
     if core is not None:
         builder = builder.config("spark.executorEnv.OPENBLAS_CORETYPE", core)
+    # On TCP loopback the JVM's small writes to a Python worker wait out
+    # Nagle and the worker's delayed ACK, ~40 ms per task whose input is
+    # a few rows (a 16-row filtered matmul_arrow at the ref shape on a
+    # 4-core x86 host: 115 ms, 73 ms on AF_UNIX). Unix sockets carry
+    # every worker stream, the accumulator server and local-data
+    # create/collect; the directory's 0700 mode stands in for the socket
+    # secret Spark skips in this mode.
+    sock_dir = python_socket_dir()
+    if sock_dir is not None:
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+            "spark.python.unix.domain.socket.dir", sock_dir
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
@@ -148,9 +200,6 @@ def ship_package(spark: SparkSession) -> None:
     matter what cwd/PYTHONPATH the driver process has (and, on a real
     cluster, on executors that don't share the driver's filesystem):
     zip the package once per SparkContext and addPyFile it."""
-    import shutil
-    import tempfile
-
     import polars_matmul_spark
 
     sc = spark.sparkContext

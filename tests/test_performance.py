@@ -136,8 +136,11 @@ def test_ref_shape_topk_vs_numpy_ratio(spark, qdf_ref):
     t_np = min(_timed(np_topk) for _ in range(3))
 
     # identity Python stage over the SAME cached frame = this run's
-    # irreducible floor (bench r6: per-job dispatch, not data volume —
-    # a 1-row identity costs the same ~0.14s)
+    # floor. Not data volume: bench r6 found a 1-row identity costing
+    # the same ~0.14s, because on TCP loopback a task with a small input
+    # waited ~40 ms on Nagle/delayed ACK for its data, about what a big
+    # input spends moving. Workers now talk to the JVM over a Unix
+    # socket (plans.session.python_socket_dir), which has no such stall
     def _ident(batches):
         yield from batches
 
